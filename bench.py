@@ -22,7 +22,7 @@ HEADLINE = [
     "q1_pricing_summary",    # native expr + hash agg (flagship)
     "o1_apply_native",       # O1 vectorized route
     "o1_apply_udf",          # O1 Arrow route
-    "o2_apply_rows",         # O2 mapInPandas
+    "o2_apply_rows",         # O2 native row route
     "o3_applymap",           # O3 per-column exprs
     "o4_groupby_apply",      # O4 applyInPandas
     "o5_rolling_sum_rows",   # O5 native window

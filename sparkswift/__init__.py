@@ -5,8 +5,10 @@ Maps the reference's adaptive-apply surface (jmcarpenter2/swifter,
 
 * ``apply`` on a column  -> native Column expression (vectorized fast path)
   or Arrow-batched scalar ``pandas_udf`` (slow path)        [O1]
-* ``apply(axis=1)``      -> ``mapInPandas`` row batches      [O2]
-* ``applymap``           -> per-column scalar pandas_udf     [O3]
+* ``apply(axis=1)``      -> native expression via a row proxy, or
+  ``mapInPandas`` row batches (vectorized, else row-wise)   [O2]
+* ``applymap``           -> per-column native expression or
+  scalar pandas_udf                                         [O3]
 * ``groupby().apply``    -> ``groupBy().applyInPandas``      [O4]
 * ``rolling().apply``    -> ``Window.rowsBetween/rangeBetween`` [O5]
 * ``resample().apply``   -> ``groupBy(F.window(ts, rule))``  [O6]

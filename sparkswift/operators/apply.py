@@ -7,18 +7,33 @@ Reference semantics (SURVEY.md §2.1):
 * O3 ``DataFrame.swifter.applymap``                        (…:483-521)
 
 The reference's *adaptive chooser* (try vectorized on a sample, else
-time the sample, else dask) becomes a **compile-time route choice**:
+time the sample, else dask) becomes a **compile-time route choice**,
+tried in this order:
 
-1. **Native route** — try calling the UDF with a ``pyspark.sql.Column``.
-   Plain-arithmetic lambdas (``lambda x: x**2 + 1``) build a Column
-   expression directly, which Catalyst folds into whole-stage codegen —
-   the Spark analog of swifter's numpy vectorized fast path
-   (swifter.py:309-317). Optionally validated against the pandas
-   result on a bounded sample, mirroring swifter's equivalence gate
-   (swifter.py:313-316).
-2. **Arrow route** — otherwise wrap as a scalar ``pandas_udf`` (Arrow
-   batches, JVM<->Python columnar transfer) with the output type
-   inferred by sample execution (plans/inference.py).
+1. **Native route** — call the UDF once on Column stand-ins: a
+   ``pyspark.sql.Column`` per cell for ``apply_series``/``applymap``,
+   a row proxy of column wrappers for ``apply_rows``. Plain-arithmetic
+   lambdas (``lambda x: x**2 + 1``, ``lambda r: r.a / (r.a + r.b)``)
+   build a Catalyst expression, folded into whole-stage codegen with
+   no Python worker — the Spark analog of swifter's numpy vectorized
+   fast path (swifter.py:309-317). The expression is kept only when it
+   matches the pandas result on the sample, mirroring swifter's
+   equivalence gate (swifter.py:313-316).
+2. **Vectorized pandas** — ``apply_rows`` only: when ``func`` on a
+   whole pandas frame equals the per-row apply on the sample, each
+   Arrow batch runs ``func(pdf)`` once (swifter.py:417-425).
+3. **Row-wise** — a scalar ``pandas_udf`` (O1/O3) or ``mapInPandas``
+   (O2) running the pandas apply per batch, with the output type
+   inferred from the sample; a pickled row-at-a-time udf is O1's last
+   resort for Arrow-incompatible payloads.
+
+**One sample per call.** ``apply_series``, ``apply_rows`` and
+``applymap`` each fetch one bounded sample (``plans.inference.
+sample_pandas``) with the candidate native expressions evaluated in
+the same job. Validation, type inference, the vectorize check, the
+``fallback=True`` Arrow check and the pickled route's type probe are
+all derived from it on the driver (swifter likewise samples once per
+call, swifter/base.py:21,46-47).
 
 Scale notes: the native route is pure Catalyst (100 TB-safe by
 construction: pushdown, pruning, codegen all apply). The Arrow route is
@@ -28,19 +43,25 @@ bounded by spark.sql.execution.arrow.maxRecordsPerBatch.
 
 from __future__ import annotations
 
+import operator
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkswift.plans.inference import (
-    infer_rows_schema,
-    infer_series_return_type,
+    arrow_convertible,
+    rows_schema,
     sample_pandas,
+    series_return_type,
     spark_type_for_dtype,
+    suppress_sample_output,
 )
+
+_NATIVE = "__sw_nat"  # sample column holding a candidate native expression
 
 
 def _try_native_column(func: Callable, col: Column) -> Column | None:
@@ -48,56 +69,16 @@ def _try_native_column(func: Callable, col: Column) -> Column | None:
     on a Column. Returns None when the UDF is not expressible that way
     (raises, or returns a non-Column)."""
     try:
-        out = func(col)
+        with suppress_sample_output():
+            out = func(col)
     except Exception:
         return None
     return out if isinstance(out, Column) else None
 
 
-def _validate_native_on_sample(
-    df: DataFrame, col: str, expr: Column, func: Callable
-) -> bool:
-    """Spark analog of swifter's vectorized-vs-apply equivalence check
-    (swifter/swifter.py:313-316): evaluate the native expression and the
-    pandas elementwise apply on the same bounded sample and compare.
-
-    ONE bounded sample job (VERDICT r4 #3 — the old gate ran two): the
-    native expression and the raw input column collect in the same
-    100-row scan (Catalyst prunes to the columns used); the pandas
-    side then runs on the collected input driver-side, no second job.
-    """
-    try:
-        pdf = (
-            df.limit(100)
-            .select(F.col(col).alias("__sw_in"), expr.alias("__sw_nat"))
-            .toPandas()
-        )
-    except Exception:
-        return False
-    native = pdf["__sw_nat"]
-    try:
-        from sparkswift.plans.inference import suppress_sample_output
-
-        # probe ONE element first: a Column-native-only func (captures
-        # F.col etc.) builds a JVM Column per call via py4j — applying
-        # it across the whole 100-row sample costs seconds of driver
-        # round-trips (the r4 bench anomaly). One probe classifies it.
-        if len(pdf):
-            with suppress_sample_output():
-                probe = func(pdf["__sw_in"].iloc[0])
-            if isinstance(probe, Column):
-                return True
-        with suppress_sample_output():
-            via_pandas = pdf["__sw_in"].apply(func)
-    except Exception:
-        # func is Column-native-only (references F.col etc. — not
-        # callable on scalars): there is no pandas result to diverge
-        # from, the expression IS the definition. Trust it.
-        return True
-    if via_pandas.map(lambda v: isinstance(v, Column)).any():
-        # scalar op Column silently builds Columns via __rmul__ etc. —
-        # same Column-native-only situation as the except branch above
-        return True
+def _same_values(native: pd.Series, via_pandas: pd.Series) -> bool:
+    """Whether a native expression's sampled values equal the pandas
+    results on the same rows (NaN matches NaN and SQL NULL)."""
     try:
         pd.testing.assert_series_equal(
             native.reset_index(drop=True).rename("v"),
@@ -106,8 +87,36 @@ def _validate_native_on_sample(
             rtol=1e-10,
         )
         return True
-    except AssertionError:
+    except (AssertionError, TypeError, ValueError):
         return False
+
+
+def _cell_native_ok(
+    func: Callable, cells: pd.Series, native: pd.Series
+) -> tuple[bool, pd.Series | None]:
+    """Spark analog of swifter's vectorized-vs-apply equivalence check
+    (swifter/swifter.py:313-316) for an elementwise func: compare the
+    native expression's sampled values with the pandas apply on the
+    same cells. Returns ``(accepted, pandas outputs or None)``; the
+    outputs are reused for type inference when the native route is
+    rejected.
+
+    A Column-native-only func (captures ``F.col`` etc.) has no pandas
+    result to diverge from — the expression IS the definition — so it
+    is trusted. One element is probed first: applying such a func
+    across the whole sample would build a JVM Column per cell via
+    py4j, seconds of driver round-trips (the r4 bench anomaly)."""
+    try:
+        with suppress_sample_output():
+            if len(cells) and isinstance(func(cells.iloc[0]), Column):
+                return True, None
+            via_pandas = cells.apply(func)
+    except Exception:
+        return True, None
+    if via_pandas.map(lambda v: isinstance(v, Column)).any():
+        # scalar op Column silently builds Columns via __rmul__ etc.
+        return True, None
+    return _same_values(native, via_pandas), via_pandas
 
 
 def apply_series(
@@ -135,28 +144,29 @@ def apply_series(
     ``force_udf`` mirrors ``force_parallel``
     (swifter/swifter.py:131-138): skip the native-expression attempt.
     ``validate`` (default True — the reference ALWAYS gates its
-    vectorized fast path on a sample check, swifter.py:313-316) runs
-    the sample equivalence gate before trusting the native route:
-    Python and SQL disagree on e.g. ``%`` of negatives (-7%3 is 2 in
-    Python, -1 in SQL), and the gate routes such funcs to the Arrow
-    path where pandas semantics hold. One bounded 100-row job — the
-    same cost profile as the reference's gate. ``validate=False`` skips
-    it for funcs known to be expression-safe. ``fallback`` enables the R6 chain (SURVEY §4): run
-    the Arrow route eagerly on a bounded sample and drop to a pickled
-    row-wise udf when the payload is Arrow-incompatible (nested mixed
-    dicts, sets, …) — lazy-plan cost: one tiny sample job.
+    vectorized fast path on a sample check, swifter.py:313-316) checks
+    the native expression against the pandas result on the call's one
+    sample before trusting it: Python and SQL disagree on e.g. ``%`` of
+    negatives (-7%3 is 2 in Python, -1 in SQL), and the gate routes
+    such funcs to the Arrow path where pandas semantics hold.
+    ``validate=False`` skips it (and the sample) for funcs known to be
+    expression-safe. ``fallback`` enables the R6 chain (SURVEY §4):
+    convert the sampled outputs to Arrow with the UDF's return type
+    driver-side and drop to a pickled row-wise udf when the payload is
+    Arrow-incompatible (nested mixed dicts, sets, …).
     """
     out_name = output_col or col
     if args or kwds:
         base = func
         func = lambda x, _b=base: _b(x, *args, **kwds)  # noqa: E731
 
+    native = None
     if not force_udf and convert_dtype:
-        expr = _try_native_column(func, F.col(col))
-        if expr is not None and (not validate or _validate_native_on_sample(df, col, expr, func)):
-            return df.withColumn(out_name, expr)
+        native = _try_native_column(func, F.col(col))
+        if native is not None and not validate:
+            return df.withColumn(out_name, native)
 
-    rtype = None
+    rtype = returns
     if not convert_dtype and returns is None:
         rtype = T.StringType()
 
@@ -168,45 +178,57 @@ def apply_series(
             except (TypeError, ValueError):
                 pass  # pd.isna on array-likes — not a null
             return str(v)
+
+    if native is None and rtype is not None and not fallback:
+        return _arrow_apply(df, col, func, out_name, rtype)  # nothing to sample
+
+    sample = sample_pandas(df, [col], {_NATIVE: native} if native is not None else None)
+    cells = sample[col]
+    outputs = None
+    if _NATIVE in sample:
+        ok, outputs = _cell_native_ok(func, cells, sample[_NATIVE])
+        if ok:
+            return df.withColumn(out_name, native)
     try:
-        rtype = rtype or returns or infer_series_return_type(df, col, func)
+        if outputs is None:
+            with suppress_sample_output():
+                outputs = cells.apply(func)
+        rtype = rtype or series_return_type(outputs)
     except Exception:
-        pass  # un-inferable payload → pickled fallback below
+        rtype = None  # un-inferable payload → pickled fallback below
 
     if rtype is not None:
-        @F.pandas_udf(rtype)
-        def _elementwise(s: pd.Series) -> pd.Series:
-            return s.apply(func)
-
-        arrow_out = df.withColumn(out_name, _elementwise(F.col(col)))
         if not fallback:
-            return arrow_out
-        try:
-            # execute the REAL Arrow path on a bounded sample — the
-            # analog of the reference's validated fallback chain
-            # (map_partitions → dask apply → pandas, swifter.py:257-285)
-            arrow_out.select(out_name).limit(20).collect()
-            return arrow_out
-        except Exception:
-            pass  # Arrow-incompatible at runtime → pickled route
+            return _arrow_apply(df, col, func, out_name, rtype)
+        if isinstance(rtype, str):
+            rtype = T.DataType.fromDDL(rtype)
+        timezone = df.sparkSession.conf.get("spark.sql.session.timeZone")
+        if arrow_convertible(outputs, rtype, timezone):
+            return _arrow_apply(df, col, func, out_name, rtype)
 
-    return _pickled_apply(df, col, func, out_name)
+    with suppress_sample_output():
+        probe = next((v for x in cells if x is not None and (v := func(x)) is not None), None)
+    return _pickled_apply(df, col, func, out_name, probe)
 
 
-def _pickled_apply(df: DataFrame, col: str, func: Callable, out_name: str) -> DataFrame:
+def _arrow_apply(
+    df: DataFrame, col: str, func: Callable, out_name: str, rtype: T.DataType | str
+) -> DataFrame:
+    @F.pandas_udf(rtype)
+    def _elementwise(s: pd.Series) -> pd.Series:
+        return s.apply(func)
+
+    return df.withColumn(out_name, _elementwise(F.col(col)))
+
+
+def _pickled_apply(df: DataFrame, col: str, func: Callable, out_name: str, probe) -> DataFrame:
     """R6 last resort: row-at-a-time pickled udf. The return type comes
-    from Spark's own inference over one sample output (createDataFrame
-    — public API); payloads even that can't type are stringified, the
-    terminal link of the chain."""
-    sample = sample_pandas(df.select(col), n=20)[col]
-    v = None
-    for x in sample:
-        if x is not None:
-            v = func(x)
-            if v is not None:
-                break
+    from Spark's own inference over ``probe``, one sampled output
+    (createDataFrame on a local row — public API, no job); payloads
+    even that can't type are stringified, the terminal link of the
+    chain."""
     try:
-        rt = df.sparkSession.createDataFrame([(v,)], ["v"]).schema[0].dataType
+        rt = df.sparkSession.createDataFrame([(probe,)], ["v"]).schema[0].dataType
         return df.withColumn(out_name, F.udf(func, rt)(F.col(col)))
     except Exception:
         # keep SQL NULLs null — str(None) would smuggle the literal
@@ -215,6 +237,176 @@ def _pickled_apply(df: DataFrame, col: str, func: Callable, out_name: str) -> Da
             lambda x, _f=func: None if (v := _f(x)) is None else str(v)
         )
         return df.withColumn(out_name, F.udf(wrapped, T.StringType())(F.col(col)))
+
+
+# --- O2 native route: a row proxy of column wrappers ------------------------
+
+# Spark types the row proxy accepts, and the numpy dtype pandas gives them
+_ROW_DTYPES = {
+    T.IntegerType: np.dtype("int32"),
+    T.LongType: np.dtype("int64"),
+    T.FloatType: np.dtype("float32"),
+    T.DoubleType: np.dtype("float64"),
+}
+
+
+class _Value:
+    """One numeric value of a pandas row, held as a Column expression.
+
+    Supports ``+ - * /``, unary minus and comparisons with other values
+    and with int/float scalars, following numpy's semantics on the row
+    dtype; anything else raises, so ``func`` falls through to the
+    pandas routes. ``/`` is IEEE division: a zero divisor gives ±inf or
+    NaN as numpy does, where Spark's ANSI mode would raise
+    ``DIVIDE_BY_ZERO``. Comparisons involving NaN or NULL are False
+    (``!=``: True), as numpy's are for NaN — pandas sees SQL NULLs as
+    NaN. Truth testing raises, so Python branching on a value (``if``,
+    ``and``, ``max``) is never traced, and so does array conversion
+    (``pd.isna``, numpy ufuncs)."""
+
+    __slots__ = ("col", "kind")
+    __array_ufunc__ = None  # numpy defers binary ops to the reflected ones here
+
+    def __init__(self, col: Column, kind: str):
+        self.col, self.kind = col, kind  # kind: "int" | "float" | "bool"
+
+    @staticmethod
+    def lift(v) -> "_Value":
+        if isinstance(v, _Value):
+            return v
+        if isinstance(v, (bool, np.bool_)):
+            raise TypeError("bool operand")
+        if isinstance(v, (int, np.integer)):
+            return _Value(F.lit(int(v)), "int")
+        if isinstance(v, (float, np.floating)):
+            return _Value(F.lit(float(v)), "float")
+        raise TypeError(f"unsupported operand {type(v).__name__}")
+
+    def _pair(self, other, reflected: bool = False) -> tuple["_Value", "_Value"]:
+        a, b = self, _Value.lift(other)
+        if "bool" in (a.kind, b.kind):
+            raise TypeError("arithmetic on a comparison result")
+        return (b, a) if reflected else (a, b)
+
+    def _num(self, other, op: Callable, reflected: bool = False) -> "_Value":
+        a, b = self._pair(other, reflected)
+        return _Value(op(a.col, b.col), "float" if "float" in (a.kind, b.kind) else "int")
+
+    def _div(self, other, reflected: bool = False) -> "_Value":
+        a, b = self._pair(other, reflected)
+        x, y = a.col.cast("double"), b.col.cast("double")
+        # x * y**-1 is ±inf or NaN exactly when x / y is in IEEE
+        # arithmetic, sign of a zero divisor included
+        return _Value(F.when(y == 0, x * F.pow(y, F.lit(-1.0))).otherwise(x / y), "float")
+
+    def _cmp(self, other, op: Callable, when_missing: bool = False) -> "_Value":
+        a, b = self._pair(other)
+        present = a.col.isNotNull() & b.col.isNotNull()
+        for v in (a, b):
+            if v.kind == "float":
+                present = present & ~F.isnan(v.col)
+        return _Value(F.when(present, op(a.col, b.col)).otherwise(when_missing), "bool")
+
+    def __add__(self, o):
+        return self._num(o, operator.add)
+
+    def __radd__(self, o):
+        return self._num(o, operator.add, True)
+
+    def __sub__(self, o):
+        return self._num(o, operator.sub)
+
+    def __rsub__(self, o):
+        return self._num(o, operator.sub, True)
+
+    def __mul__(self, o):
+        return self._num(o, operator.mul)
+
+    def __rmul__(self, o):
+        return self._num(o, operator.mul, True)
+
+    def __truediv__(self, o):
+        return self._div(o)
+
+    def __rtruediv__(self, o):
+        return self._div(o, True)
+
+    def __neg__(self):
+        if self.kind == "bool":
+            raise TypeError("negating a comparison result")
+        return _Value(-self.col, self.kind)
+
+    def __lt__(self, o):
+        return self._cmp(o, operator.lt)
+
+    def __le__(self, o):
+        return self._cmp(o, operator.le)
+
+    def __gt__(self, o):
+        return self._cmp(o, operator.gt)
+
+    def __ge__(self, o):
+        return self._cmp(o, operator.ge)
+
+    def __eq__(self, o):
+        return self._cmp(o, operator.eq)
+
+    def __ne__(self, o):
+        return self._cmp(o, operator.ne, when_missing=True)
+
+    __hash__ = None
+
+    def __bool__(self):
+        raise TypeError("truth value of a traced row value")
+
+    def __array__(self, *args, **kwargs):
+        raise TypeError("array conversion of a traced row value")
+
+
+class _Row:
+    """Stands in for the pandas row Series: ``row["c"]`` and ``row.c``
+    give the column's :class:`_Value`; anything else raises."""
+
+    __slots__ = ("_values",)
+
+    def __init__(self, values: dict[str, _Value]):
+        self._values = values
+
+    def __getitem__(self, key):
+        if isinstance(key, str) and key in self._values:
+            return self._values[key]
+        raise KeyError(key)
+
+    def __getattr__(self, name):
+        # Series attributes (row.name, row.size, …) shadow columns in pandas
+        if name.startswith("_") or hasattr(pd.Series, name) or name not in self._values:
+            raise AttributeError(name)
+        return self._values[name]
+
+
+def _try_native_row(func: Callable, df: DataFrame) -> Column | None:
+    """Call ``func`` once on a :class:`_Row` of ``df``'s columns and
+    return the expression it builds, or None when the frame is not all
+    integer/floating or ``func`` raises or returns anything but a
+    traced value. Every column is cast to the dtype pandas gives the
+    row Series (numpy's common type of the column dtypes), so the
+    expression computes in the same type as ``func`` does per row."""
+    dtypes = [_ROW_DTYPES.get(type(f.dataType)) for f in df.schema.fields]
+    if not dtypes or any(d is None for d in dtypes):
+        return None
+    row_dtype = np.result_type(*dtypes)
+    kind = "float" if row_dtype.kind == "f" else "int"
+    stype = spark_type_for_dtype(row_dtype)
+    row = _Row({c: _Value(F.col(c).cast(stype), kind) for c in df.columns})
+    try:
+        with suppress_sample_output():
+            out = func(row)
+    except Exception:
+        return None
+    if not isinstance(out, _Value):
+        return None
+    # the row-wise route ships NaN results through Arrow as NULL
+    return F.nanvl(out.col, F.lit(None).cast("double")) if out.kind == "float" else out.col
 
 
 def apply_rows(
@@ -229,16 +421,34 @@ def apply_rows(
     args: tuple = (),
     **kwds,
 ) -> DataFrame:
-    """O2 — row-wise apply (pandas ``axis=1``) via ``mapInPandas``.
+    """O2 — row-wise apply (pandas ``axis=1``).
 
-    Each Arrow batch is a pandas DataFrame; we run the same
-    ``pdf.apply(func, axis=1, result_type=...)`` a pandas user would,
-    preserving ``result_type=None|'expand'|'reduce'|'broadcast'``
-    passthrough semantics (reference: swifter/swifter.py:352-365,
-    docs/documentation.md:103-108 there). ``raw=True`` (reference
-    signature swifter/swifter.py:400) hands each row to ``func`` as a
-    bare ndarray instead of a Series — pandas' C-loop dispatch for
-    numpy-reducer UDFs, forwarded verbatim to ``pdf.apply``.
+    Routes, in order (module docstring), all decided on the call's one
+    bounded sample:
+
+    1. **Native**: ``func`` called on a row proxy builds a Catalyst
+       expression (``+ - * /``, unary minus and comparisons over an
+       all-integer/floating frame; IEEE ``/``). Kept when it equals
+       the per-row apply on the sample; emitted cast to the sampled
+       type, so no Python worker runs.
+    2. **Vectorized** (the reference's vectorize-try,
+       swifter/swifter.py:417-425): when ``func`` on the whole sample
+       frame gives the same result as the per-row apply, each Arrow
+       batch of ``mapInPandas`` runs ``func(pdf)`` once — columnar
+       pandas arithmetic instead of a Python loop per row (~100×).
+    3. **Row-wise**: each Arrow batch is a pandas DataFrame; we run the
+       same ``pdf.apply(func, axis=1, result_type=...)`` a pandas user
+       would, preserving ``result_type=None|'expand'|'reduce'|
+       'broadcast'`` passthrough semantics (reference:
+       swifter/swifter.py:352-365, docs/documentation.md:103-108
+       there). ``raw=True`` (reference signature swifter/swifter.py:400)
+       hands each row to ``func`` as a bare ndarray instead of a
+       Series — pandas' C-loop dispatch for numpy-reducer UDFs,
+       forwarded verbatim to ``pdf.apply``.
+
+    ``force_udf=True`` (force_parallel analog) skips routes 1 and 2;
+    ``result_type``, ``args`` and ``kwds`` skip them too, ``raw`` skips
+    route 1.
 
     Scalar-result UDFs append ``output_col``; Series-result UDFs expand
     into one column per output key. ``keep_cols`` keeps the input
@@ -248,36 +458,16 @@ def apply_rows(
 
     Scale: pure map-side (no shuffle); batches stream through Python
     workers, memory bounded per batch.
-
-    Adaptive vectorization (the reference's vectorize-try,
-    swifter/swifter.py:417-425): when calling ``func`` on a whole
-    pandas DataFrame gives the SAME result as the per-row apply on a
-    bounded sample, each Arrow batch runs ``func(pdf)`` once —
-    columnar pandas arithmetic instead of a Python loop per row
-    (~100×). ``force_udf=True`` (force_parallel analog) disables the
-    attempt.
     """
-    inferred, scalar_result = infer_rows_schema(df, func, result_type, args, kwds, raw=raw)
-    vectorize = False
-    if not force_udf and result_type is None and not args and not kwds:
-        try:
-            import numpy as np
-
-            sample = sample_pandas(df, n=50)
-            slow = sample.apply(func, axis=1, raw=raw)
-            fast = func(sample)
-            vectorize = (
-                isinstance(slow, pd.Series)
-                and isinstance(fast, pd.Series)
-                and len(fast) == len(slow)
-                and bool(
-                    np.array_equal(
-                        slow.to_numpy(), fast.to_numpy(), equal_nan=True
-                    )
-                )
-            )
-        except Exception:
-            vectorize = False
+    try_fast = not force_udf and result_type is None and not args and not kwds
+    native = _try_native_row(func, df) if try_fast and not raw else None
+    sample = sample_pandas(df, native={_NATIVE: native} if native is not None else None)
+    rows = sample[df.columns]
+    with suppress_sample_output():
+        slow = rows.apply(
+            func, axis=1, raw=raw, result_type=result_type, args=args, **kwds
+        )
+    inferred, scalar_result = rows_schema(slow)
     if schema is not None:
         out_schema = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
         scalar_result = len(out_schema.fields) == 1 and out_schema.fields[0].name == output_col
@@ -286,12 +476,26 @@ def apply_rows(
         if scalar_result and output_col != "result":
             out_schema = T.StructType([T.StructField(output_col, out_schema["result"].dataType, True)])
 
-    if keep_cols:
-        existing = [f for f in df.schema.fields if f.name not in {x.name for x in out_schema.fields}]
-        full_schema = T.StructType(existing + list(out_schema.fields))
-    else:
-        full_schema = out_schema
     result_names = [f.name for f in out_schema.fields]
+    kept = [c for c in df.columns if c not in result_names] if keep_cols else []
+    if scalar_result and _NATIVE in sample and len(sample) and _same_values(sample[_NATIVE], slow):
+        field = out_schema.fields[0]
+        return df.select(*kept, native.cast(field.dataType).alias(field.name))
+
+    vectorize = False
+    if try_fast and isinstance(slow, pd.Series):
+        try:
+            with suppress_sample_output():
+                fast = func(rows)
+            vectorize = (
+                isinstance(fast, pd.Series)
+                and len(fast) == len(slow)
+                and bool(np.array_equal(slow.to_numpy(), fast.to_numpy(), equal_nan=True))
+            )
+        except Exception:
+            vectorize = False
+
+    full_schema = T.StructType([df.schema[c] for c in kept] + list(out_schema.fields))
     full_names = [f.name for f in full_schema.fields]
 
     def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -323,31 +527,45 @@ def applymap(
     """O3 — the same scalar UDF applied to every cell of every column
     (reference: swifter/swifter.py:483-521).
 
-    Native route when the UDF builds a Column expression; otherwise one
-    scalar pandas_udf instantiated per column dtype. All map-side, no
-    shuffle.
+    Native route for each column whose Column expression matches the
+    pandas result on the call's one sample (all columns' candidates are
+    evaluated in that one job); otherwise one scalar pandas_udf
+    instantiated per inferred return type. All map-side, no shuffle.
     """
-    targets = cols or df.columns
+    targets = [c for c in df.columns if c in (cols or df.columns)]
+    keys = {c: f"{_NATIVE}{i}" for i, c in enumerate(targets)}
+    candidates: dict[str, Column] = {}
+    for c in targets:
+        native = None if force_udf else _try_native_column(func, F.col(c))
+        if native is not None:
+            candidates[keys[c]] = native
+    sample = sample_pandas(df, targets, candidates) if targets else None
     exprs: list[Column] = []
     udf_cache: dict[str, Callable] = {}
     for c in df.columns:
-        if c not in targets:
+        if c not in keys:
             exprs.append(F.col(c))
             continue
-        native = None if force_udf else _try_native_column(func, F.col(c))
-        if native is not None:
-            exprs.append(native.alias(c))
-            continue
-        rtype = infer_series_return_type(df, c, func)
-        key = rtype.simpleString()
-        if key not in udf_cache:
+        key = keys[c]
+        outputs = None
+        if key in sample:
+            ok, outputs = _cell_native_ok(func, sample[c], sample[key])
+            if ok:
+                exprs.append(candidates[key].alias(c))
+                continue
+        if outputs is None:
+            with suppress_sample_output():
+                outputs = sample[c].apply(func)
+        rtype = series_return_type(outputs)
+        name = rtype.simpleString()
+        if name not in udf_cache:
 
             @F.pandas_udf(rtype)
             def _cellwise(s: pd.Series) -> pd.Series:
                 return s.apply(func)
 
-            udf_cache[key] = _cellwise
-        exprs.append(udf_cache[key](F.col(c)).alias(c))
+            udf_cache[name] = _cellwise
+        exprs.append(udf_cache[name](F.col(c)).alias(c))
     return df.select(*exprs)
 
 

@@ -1,13 +1,13 @@
 from sparkswift.plans.inference import (
     spark_type_for_dtype,
     sample_pandas,
-    infer_series_return_type,
-    infer_rows_schema,
+    series_return_type,
+    rows_schema,
 )
 
 __all__ = [
     "spark_type_for_dtype",
     "sample_pandas",
-    "infer_series_return_type",
-    "infer_rows_schema",
+    "series_return_type",
+    "rows_schema",
 ]

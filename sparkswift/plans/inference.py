@@ -22,11 +22,11 @@ from __future__ import annotations
 import logging
 import os
 from contextlib import contextmanager, redirect_stderr, redirect_stdout
-from typing import Any, Callable
+from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 SAMPLE_SIZE = 1000  # mirrors swifter/base.py:21
@@ -98,19 +98,44 @@ def _first_non_null(s: pd.Series) -> Any:
     return nn.iloc[0] if len(nn) else None
 
 
-def sample_pandas(df: DataFrame, n: int = SAMPLE_SIZE) -> pd.DataFrame:
-    """Bounded driver-side sample (``limit`` — no full scan)."""
-    return df.limit(n).toPandas()
+def sample_pandas(
+    df: DataFrame,
+    cols: list[str] | None = None,
+    native: dict[str, Column] | None = None,
+    n: int = SAMPLE_SIZE,
+) -> pd.DataFrame:
+    """The one bounded driver-side sample of an apply call (``limit`` —
+    no full scan): the first ``n`` rows of ``cols`` (default: every
+    column), plus each candidate native expression of ``native``
+    evaluated in the same job as an extra column named by its key.
+
+    Route validation, type inference and the vectorize check all read
+    this one frame (swifter likewise takes one sample per call,
+    swifter/base.py:21,46-47). A candidate that fails analysis is left
+    out (analysis runs no job); if the job itself fails — a candidate
+    raised at run time — the sample is fetched again without
+    candidates, the only case that costs a second job. A candidate
+    missing from the result was rejected."""
+    base = df.limit(n)
+    cols = ["*"] if cols is None else list(cols)
+    picked = []
+    for name, expr in (native or {}).items():
+        try:
+            df.select(expr)  # analysis only
+        except Exception:
+            continue
+        picked.append(expr.alias(name))
+    if picked:
+        try:
+            return base.select(*cols, *picked).toPandas()
+        except Exception:
+            pass
+    return base.select(*cols).toPandas()
 
 
-def infer_series_return_type(
-    df: DataFrame, col: str, func: Callable, args: tuple = (), kwds: dict | None = None
-) -> T.DataType:
-    """Run ``func`` elementwise on a sampled column, return the Spark type
-    of the result (swifter's dask-``meta`` analog for O1)."""
-    sample = sample_pandas(df.select(col))[col]
-    with suppress_sample_output():
-        out = sample.apply(func, args=args, **(kwds or {}))
+def series_return_type(out: pd.Series) -> T.DataType:
+    """The Spark type of a sampled elementwise result (swifter's
+    dask-``meta`` analog for O1)."""
     return spark_type_for_dtype(out.dtype, _first_non_null(out))
 
 
@@ -122,15 +147,8 @@ def schema_from_pandas(pdf: pd.DataFrame) -> T.StructType:
     return T.StructType(fields)
 
 
-def infer_rows_schema(
-    df: DataFrame,
-    func: Callable,
-    result_type: str | None = None,
-    args: tuple = (),
-    kwds: dict | None = None,
-    raw: bool = False,
-) -> tuple[T.StructType, bool]:
-    """Infer the output schema of a row-wise (axis=1) apply.
+def rows_schema(out: pd.Series | pd.DataFrame) -> tuple[T.StructType, bool]:
+    """The output schema of a sampled row-wise (axis=1) apply.
 
     Returns ``(schema, scalar_result)`` where ``scalar_result`` is True
     when the UDF returns one value per row (result column named
@@ -138,16 +156,23 @@ def infer_rows_schema(
     into multiple columns — pandas ``result_type='expand'`` semantics,
     reference passthrough at swifter/swifter.py:352-365).
     """
-    sample = sample_pandas(df)
-    with suppress_sample_output():
-        out = sample.apply(
-            func, axis=1, raw=raw, result_type=result_type, args=args, **(kwds or {})
-        )
     if isinstance(out, pd.DataFrame):
         return schema_from_pandas(out), False
-    return (
-        T.StructType(
-            [T.StructField("result", spark_type_for_dtype(out.dtype, _first_non_null(out)), True)]
-        ),
-        True,
-    )
+    return T.StructType([T.StructField("result", series_return_type(out), True)]), True
+
+
+def arrow_convertible(out: pd.Series, rtype: T.DataType, timezone: str) -> bool:
+    """Whether a scalar pandas_udf returning ``rtype`` can ship ``out``:
+    the same pandas-to-Arrow conversion the UDF's worker runs on each
+    batch (unsafe casts allowed, as by Spark's default
+    ``convertToArrowArraySafely=false``), done driver-side on the
+    sampled outputs."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    serializer = ArrowStreamPandasSerializer(timezone, False, False)
+    try:
+        serializer._create_array(out, to_arrow_type(rtype), spark_type=rtype, arrow_cast=True)
+    except Exception:
+        return False
+    return True

@@ -157,7 +157,8 @@ def o1_apply_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# O2 — row-wise apply (axis=1) via mapInPandas; scalar result column.
+# O2 — row-wise apply (axis=1), scalar result column: plain arithmetic
+# over numeric columns, so it takes the native row route (no Python worker).
 # ---------------------------------------------------------------------------
 @register(
     "o2_apply_rows",

@@ -1898,7 +1898,7 @@ def _t26_synth_sql() -> str:
 def _t26_oracle() -> str:
     from sparkswift.suite_llm import _lang_vote_sql
 
-    toks = "list_filter(string_split_regex(trim(txt), '\s+'), x -> x <> '')"
+    toks = r"list_filter(string_split_regex(trim(txt), '\s+'), x -> x <> '')"
     return f"""
     WITH s AS (SELECT doc_id, lang, {_t26_synth_sql()} AS txt
                FROM documents),

@@ -17,6 +17,10 @@ def li(spark, sf_dir):
     )
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_o1_native_route_equals_udf_route(li):
     """Same UDF through both routes must agree (reference gate
     swifter.py:313-316)."""
@@ -53,12 +57,20 @@ def test_o1_udf_fallback_for_opaque_function(li):
 
 
 def test_o2_apply_rows_scalar(li):
-    out = apply_rows(
-        li, lambda r: r["l_extendedprice"] / r["l_quantity"], output_col="unit"
-    )
+    """Plain arithmetic over numeric columns takes the native route: no
+    MapInPandas node, and the same frame as the forced row-wise path."""
+    f = lambda r: r["l_extendedprice"] / r["l_quantity"]  # noqa: E731
+    out = apply_rows(li, f, output_col="unit")
+    assert "MapInPandas" not in _plan(out)
     pdf = out.toPandas()
     expected = pdf["l_extendedprice"] / pdf["l_quantity"]
     pd.testing.assert_series_equal(pdf["unit"], expected, check_names=False)
+    keys = ["l_orderkey", "l_linenumber"]
+    row_wise = apply_rows(li, f, output_col="unit", force_udf=True).toPandas()
+    pd.testing.assert_frame_equal(
+        pdf.sort_values(keys).reset_index(drop=True),
+        row_wise.sort_values(keys).reset_index(drop=True),
+    )
 
 
 def test_o2_apply_rows_expand(li):
@@ -198,21 +210,63 @@ def test_fallback_chain_arrow_incompatible_payloads(spark, sf_dir):
 
 def test_apply_rows_vectorize_gate_equivalence(spark, sf_dir):
     """The vectorize-try (reference swifter.py:417-425 analog) must
-    produce byte-identical results to the forced row-at-a-time path."""
+    produce byte-identical results to the forced row-at-a-time path.
+    Both funcs stay off the native route: ``%`` has no row-proxy form,
+    and a string column rules the frame out."""
     from sparkswift.operators.apply import apply_rows
     from sparkswift.sources import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity"
+        "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity", "l_returnflag"
     ).limit(500)
-    f = lambda row: row["l_extendedprice"] / row["l_quantity"]  # noqa: E731
-    fast = apply_rows(li, f, output_col="u").select("l_orderkey", "l_linenumber", "u")
-    slow = apply_rows(li, f, output_col="u", force_udf=True).select(
-        "l_orderkey", "l_linenumber", "u"
-    )
-    a = fast.toPandas().sort_values(["l_orderkey", "l_linenumber"]).reset_index(drop=True)
-    b = slow.toPandas().sort_values(["l_orderkey", "l_linenumber"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    cases = [
+        (li.drop("l_returnflag"), lambda row: row["l_extendedprice"] % 7),
+        (li, lambda row: row["l_extendedprice"] / row["l_quantity"]),
+    ]
+    for frame, f in cases:
+        fast = apply_rows(frame, f, output_col="u").select("l_orderkey", "l_linenumber", "u")
+        slow = apply_rows(frame, f, output_col="u", force_udf=True).select(
+            "l_orderkey", "l_linenumber", "u"
+        )
+        assert "MapInPandas" in _plan(fast)
+        a = fast.toPandas().sort_values(["l_orderkey", "l_linenumber"]).reset_index(drop=True)
+        b = slow.toPandas().sort_values(["l_orderkey", "l_linenumber"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b)
+
+
+def test_apply_rows_native_divide_is_ieee_past_the_sample(spark):
+    """A divisor that turns 0 only past the sample: Spark's ANSI
+    division raises DIVIDE_BY_ZERO there, the native route's IEEE
+    divide gives ±inf (and NULL for 0/0) exactly as the row-wise route
+    does, and comparisons on NaN are False as in numpy."""
+    import numpy as np
+
+    from sparkswift.operators.apply import apply_rows
+
+    i = np.arange(3000)
+    pdf = pd.DataFrame({"i": i, "a": i % 5 - 1, "b": np.where(i < 1500, 1 + i % 3, 0)})
+    df = spark.createDataFrame(pdf)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        df.select(F.col("a") / F.col("b")).collect()
+
+    funcs = {
+        "ratio": lambda row: row["a"] / row["b"],
+        "compare": lambda row: -row.a / row.b >= 0.5,
+    }
+    past = {}
+    for name, f in funcs.items():
+        fast = apply_rows(df, f, output_col="q")
+        assert "MapInPandas" not in _plan(fast)
+        got = fast.toPandas().sort_values("i").reset_index(drop=True)
+        want = apply_rows(df, f, output_col="q", force_udf=True).toPandas()
+        pd.testing.assert_frame_equal(got, want.sort_values("i").reset_index(drop=True))
+        past[name] = got[got["i"] >= 1500]
+    ratio, compare = past["ratio"], past["compare"]
+    assert set(ratio.loc[ratio["a"] > 0, "q"]) == {np.inf}
+    assert set(ratio.loc[ratio["a"] < 0, "q"]) == {-np.inf}
+    assert ratio.loc[ratio["a"] == 0, "q"].isna().all()
+    assert compare.loc[compare["a"] < 0, "q"].all()  # -(-1) / 0 is inf
+    assert not compare.loc[compare["a"] >= 0, "q"].any()  # -inf, or NaN from 0 / 0
 
 
 def test_apply_rows_vectorize_gate_rejects_row_scalar(spark, sf_dir):
@@ -225,6 +279,7 @@ def test_apply_rows_vectorize_gate_rejects_row_scalar(spark, sf_dir):
         "l_quantity", "l_discount"
     ).limit(100)
     out = apply_rows(li, lambda row: row.sum(), output_col="s")
+    assert "MapInPandas" in _plan(out)
     got = out.select("s").toPandas()["s"]
     want = (
         li.toPandas().apply(lambda row: row.sum(), axis=1)
@@ -263,7 +318,7 @@ def test_pickled_fallback_keeps_nulls_null(spark):
     # a set return value defeats both schema inference routes → the
     # stringified terminal branch
     out = _pickled_apply(
-        df, "s", lambda x: None if x is None else {x}, "o"
+        df, "s", lambda x: None if x is None else {x}, "o", {"a"}
     )
     rows = {r.id: r.o for r in out.collect()}
     assert rows[2] is None
@@ -387,6 +442,68 @@ def test_accessor_groupby_level_validation(spark, sf_dir):
         swift(li).groupby(level=0)
     with pytest.raises(ValueError, match="not in frame"):
         swift(li).groupby(level="no_such_col")
+
+
+def _negatives(spark):
+    return spark.createDataFrame(pd.DataFrame({"x": [-7, -4, -1, 0, 1, 4, 7]}))
+
+
+def _string_cell(x):
+    return {("a", x)}
+
+
+# case -> (build, the Python node its plan must hold; None: no Python node)
+ONE_SAMPLE_CASES = {
+    "series_native": (
+        lambda li, spark: apply_series(li, "l_quantity", lambda x: x * 2 + 1),
+        None,
+    ),
+    "series_native_rejected": (
+        lambda li, spark: apply_series(_negatives(spark), "x", lambda x: x % 3),
+        "ArrowEvalPython",
+    ),
+    "series_fallback": (
+        lambda li, spark: apply_series(
+            li, "l_quantity", _string_cell, output_col="s", fallback=True
+        ),
+        "BatchEvalPython",
+    ),
+    "rows_native": (
+        lambda li, spark: apply_rows(li, lambda r: r["l_extendedprice"] / r["l_quantity"]),
+        None,
+    ),
+    "rows_vectorized": (
+        lambda li, spark: apply_rows(li, lambda r: r["l_extendedprice"] % 7),
+        "MapInPandas",
+    ),
+    "rows_row_wise": (lambda li, spark: apply_rows(li, lambda r: r.sum()), "MapInPandas"),
+    "applymap_udf": (
+        lambda li, spark: applymap(
+            li.select("l_quantity", "l_extendedprice", "l_orderkey"),
+            lambda x: 1.0 if x > 5 else 0.0,
+        ),
+        "ArrowEvalPython",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(ONE_SAMPLE_CASES))
+def test_apply_build_runs_at_most_one_job(spark, li, case):
+    """Building an apply call fetches one bounded sample: route
+    validation, type inference, the vectorize check and the fallback
+    Arrow check all read it (reference swifter/base.py:21,46-47)."""
+    build, python_node = ONE_SAMPLE_CASES[case]
+    sc = spark.sparkContext
+    group = f"one-sample-{case}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build(li, spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    plan = _plan(out)
+    nodes = {"ArrowEvalPython", "BatchEvalPython", "MapInPandas"}
+    assert {n for n in nodes if n in plan} == ({python_node} if python_node else set())
 
 
 # --- O8: cogrouped two-frame apply ------------------------------------------

@@ -6,9 +6,12 @@ on every test run. Heavy builds (persisted index/store seeds that run
 real jobs at plan-build time) are excluded here and covered by the
 tool sweep."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from planlint import lint_plan  # noqa: E402
 

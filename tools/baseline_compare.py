@@ -147,8 +147,9 @@ def main() -> None:
     )
 
     # cell 25 — two-column axis=1 ratio apply (11.7 s). Engine analog:
-    # the honest axis=1 route — mapInPandas row-frame UDF (NOT the
-    # native expression, which would be the vectorized route).
+    # the honest axis=1 route — mapInPandas row-frame UDF. force_udf
+    # keeps apply_rows off its native and vectorized routes, which
+    # would take this ratio.
     from sparkswift.operators.apply import apply_rows
 
     bench(
@@ -159,6 +160,7 @@ def main() -> None:
             lambda row: row["bikes_available"]
             / (row["bikes_available"] + row["docks_available"]),
             output_col="ratio",
+            force_udf=True,
         ),
         "Arrow mapInPandas, row-wise pandas",
     )
