@@ -3,7 +3,8 @@
 Maps the reference's adaptive-apply surface (jmcarpenter2/swifter,
 `/root/reference/swifter/swifter.py`) onto idiomatic Spark primitives:
 
-* ``apply`` on a column  -> native Column expression (vectorized fast path)
+* ``apply`` on a column  -> native Column expression (vectorized fast path,
+  Python branches traced into ``CASE WHEN``)
   or Arrow-batched scalar ``pandas_udf`` (slow path)        [O1]
 * ``apply(axis=1)``      -> native expression via a row proxy, or
   ``mapInPandas`` row batches (vectorized, else row-wise)   [O2]

@@ -10,15 +10,19 @@ The reference's *adaptive chooser* (try vectorized on a sample, else
 time the sample, else dask) becomes a **compile-time route choice**,
 tried in this order:
 
-1. **Native route** — call the UDF once on Column stand-ins: a
-   ``pyspark.sql.Column`` per cell for ``apply_series``/``applymap``,
-   a row proxy of column wrappers for ``apply_rows``. Plain-arithmetic
-   lambdas (``lambda x: x**2 + 1``, ``lambda r: r.a / (r.a + r.b)``)
-   build a Catalyst expression, folded into whole-stage codegen with
-   no Python worker — the Spark analog of swifter's numpy vectorized
-   fast path (swifter.py:309-317). The expression is kept only when it
-   matches the pandas result on the sample, mirroring swifter's
-   equivalence gate (swifter.py:313-316).
+1. **Native route** — call the UDF on Column stand-ins: a
+   ``pyspark.sql.Column`` per cell for ``apply_series``/``applymap``
+   (then, over a numeric column, a traced value), a row proxy of
+   traced values for ``apply_rows``. Plain-arithmetic lambdas
+   (``lambda x: x**2 + 1``, ``lambda r: r.a / (r.a + r.b)``) build a
+   Catalyst expression, folded into whole-stage codegen with no Python
+   worker — the Spark analog of swifter's numpy vectorized fast path
+   (swifter.py:309-317). Python branches on comparisons (``True if x >
+   5 else False``, ``if``/``elif``/``else``, ``and``/``or``/``not``,
+   ``max``/``min``, ``x in (1, 2)``) are traced: the UDF is re-run once
+   per branch path and the paths fold into one ``CASE WHEN``. The
+   expression is kept only when it matches the pandas result on the
+   sample, mirroring swifter's equivalence gate (swifter.py:313-316).
 2. **Vectorized pandas** — ``apply_rows`` only: when ``func`` on a
    whole pandas frame equals the per-row apply on the sample, each
    Arrow batch runs ``func(pdf)`` once (swifter.py:417-425).
@@ -44,6 +48,7 @@ bounded by spark.sql.execution.arrow.maxRecordsPerBatch.
 from __future__ import annotations
 
 import operator
+import threading
 from typing import Callable, Iterator
 
 import numpy as np
@@ -162,7 +167,7 @@ def apply_series(
 
     native = None
     if not force_udf and convert_dtype:
-        native = _try_native_column(func, F.col(col))
+        native = _try_native_cell(func, df, col)
         if native is not None and not validate:
             return df.withColumn(out_name, native)
 
@@ -239,9 +244,9 @@ def _pickled_apply(df: DataFrame, col: str, func: Callable, out_name: str, probe
         return df.withColumn(out_name, F.udf(wrapped, T.StringType())(F.col(col)))
 
 
-# --- O2 native route: a row proxy of column wrappers ------------------------
+# --- Traced native route: column values, branches, and the O2 row proxy ----
 
-# Spark types the row proxy accepts, and the numpy dtype pandas gives them
+# Spark types the traced values accept, and the numpy dtype pandas gives them
 _ROW_DTYPES = {
     T.IntegerType: np.dtype("int32"),
     T.LongType: np.dtype("int64"),
@@ -249,20 +254,74 @@ _ROW_DTYPES = {
     T.DoubleType: np.dtype("float64"),
 }
 
+_MAX_LEAVES, _MAX_DEPTH = 16, 8  # bounds of a traced func's branch tree
+
+
+class _Fork(BaseException):
+    """Stops a traced run at its first truth test past the forced
+    decisions. A BaseException, so ``except Exception`` in ``func``
+    cannot swallow it."""
+
+    def __init__(self, cond: Column | None):
+        self.cond = cond  # None: the run left the traced path
+
+
+class _Run:
+    """One traced call of ``func``: the decisions forced on it, each
+    with the condition (string form) it was forced on."""
+
+    __slots__ = ("path", "used")
+
+    def __init__(self, path: list[tuple[str, bool]]):
+        self.path, self.used = path, 0
+
+    def decide(self, cond: Column) -> bool:
+        if self.used == len(self.path):
+            raise _Fork(cond)
+        key, taken = self.path[self.used]
+        if str(cond) != key:
+            raise _Fork(None)  # another condition here: func has hidden state
+        self.used += 1
+        return taken
+
+
+class _TraceState(threading.local):
+    run: _Run | None = None
+
+
+_TRACE = _TraceState()
+
 
 class _Value:
-    """One numeric value of a pandas row, held as a Column expression.
+    """One numeric value of a pandas row or cell, held as a Column
+    expression.
 
     Supports ``+ - * /``, unary minus and comparisons with other values
-    and with int/float scalars, following numpy's semantics on the row
-    dtype; anything else raises, so ``func`` falls through to the
-    pandas routes. ``/`` is IEEE division: a zero divisor gives ±inf or
-    NaN as numpy does, where Spark's ANSI mode would raise
+    and with int/float scalars, following numpy's semantics on the
+    value's dtype; anything else raises, so ``func`` falls through to
+    the pandas routes. ``/`` is IEEE division: a zero divisor gives
+    ±inf or NaN as numpy does, where Spark's ANSI mode would raise
     ``DIVIDE_BY_ZERO``. Comparisons involving NaN or NULL are False
     (``!=``: True), as numpy's are for NaN — pandas sees SQL NULLs as
-    NaN. Truth testing raises, so Python branching on a value (``if``,
-    ``and``, ``max``) is never traced, and so does array conversion
-    (``pd.isna``, numpy ufuncs)."""
+    NaN. Array conversion (``pd.isna``, numpy ufuncs) raises.
+
+    Integer ``+ - *`` compute in the column's integer type under
+    Spark's ANSI mode: a result past its range raises
+    ``ARITHMETIC_OVERFLOW`` where numpy wraps silently. That is kept on
+    purpose — a loud error beats a silently wrong value — and the sample
+    cannot see it when only rows past the sample overflow.
+
+    Python branching is traced (:func:`_trace`): a comparison result
+    may be truth-tested, so ``if``/``elif``/``else``, ternaries,
+    ``and``/``or``/``not``, chained comparisons, ``max``/``min`` and
+    ``x in (1, 2)`` fold into one ``CASE WHEN``. A comparison result is
+    never NULL, so ``CASE WHEN`` takes the branch Python takes on a NaN
+    cell. Truth-testing a number (``if x:``) raises. The trace gives up
+    past 16 leaves or a branch depth of 8, when a re-run meets another
+    condition than the one forced at the same position or returns
+    before reaching it (hidden state), or when a leaf is not a traced
+    value or a Python bool, int or float (``None``, strings, bools
+    mixed with numbers)."""
 
     __slots__ = ("col", "kind")
     __array_ufunc__ = None  # numpy defers binary ops to the reflected ones here
@@ -357,7 +416,10 @@ class _Value:
     __hash__ = None
 
     def __bool__(self):
-        raise TypeError("truth value of a traced row value")
+        run = _TRACE.run
+        if self.kind != "bool" or run is None:
+            raise TypeError("truth value of a traced number, or outside a trace")
+        return run.decide(self.col)
 
     def __array__(self, *args, **kwargs):
         raise TypeError("array conversion of a traced row value")
@@ -384,29 +446,78 @@ class _Row:
         return self._values[name]
 
 
+def _trace(func: Callable, arg) -> Column | None:
+    """The expression ``func(arg)`` builds over :class:`_Value` stand-ins,
+    following Python branches; None when ``func`` is not traceable.
+
+    ``func`` is re-run once per branch path: the first truth test past
+    the forced decisions raises :class:`_Fork`, and the path is re-run
+    with that decision forced True, then False. The paths fold into
+    nested ``F.when(cond, then).otherwise(else_)``. Gives up on the
+    rules and bounds of :class:`_Value`'s docstring. Float results map
+    NaN to NULL, as the row-wise routes' Arrow conversion does."""
+    kinds: list[str] = []  # one per leaf
+
+    def explore(path: list[tuple[str, bool]]) -> Column:
+        run = _TRACE.run = _Run(path)
+        try:
+            out = func(arg)
+        except _Fork as fork:
+            out = fork
+        finally:
+            _TRACE.run = None
+        if isinstance(out, _Fork):
+            if out.cond is None or len(path) == _MAX_DEPTH:
+                raise ValueError("untraceable branches")
+            key = str(out.cond)
+            then, else_ = explore(path + [(key, True)]), explore(path + [(key, False)])
+            return F.when(out.cond, then).otherwise(else_)
+        if run.used < len(path) or len(kinds) == _MAX_LEAVES:
+            raise ValueError("untraceable branches")
+        if isinstance(out, (bool, np.bool_)):
+            out = _Value(F.lit(bool(out)), "bool")
+        leaf = _Value.lift(out)  # raises on None, strings and other objects
+        kinds.append(leaf.kind)
+        return leaf.col
+
+    try:
+        with suppress_sample_output():
+            out = explore([])
+    except Exception:
+        return None
+    if "bool" in kinds and len(set(kinds)) > 1:
+        return None
+    return F.nanvl(out, F.lit(None).cast("double")) if "float" in kinds else out
+
+
 def _try_native_row(func: Callable, df: DataFrame) -> Column | None:
-    """Call ``func`` once on a :class:`_Row` of ``df``'s columns and
+    """Trace ``func`` over a :class:`_Row` of ``df``'s columns and
     return the expression it builds, or None when the frame is not all
-    integer/floating or ``func`` raises or returns anything but a
-    traced value. Every column is cast to the dtype pandas gives the
-    row Series (numpy's common type of the column dtypes), so the
-    expression computes in the same type as ``func`` does per row."""
+    integer/floating or ``func`` is not traceable. Every column is cast
+    to the dtype pandas gives the row Series (numpy's common type of
+    the column dtypes), so the expression computes in the same type as
+    ``func`` does per row."""
     dtypes = [_ROW_DTYPES.get(type(f.dataType)) for f in df.schema.fields]
     if not dtypes or any(d is None for d in dtypes):
         return None
     row_dtype = np.result_type(*dtypes)
     kind = "float" if row_dtype.kind == "f" else "int"
     stype = spark_type_for_dtype(row_dtype)
-    row = _Row({c: _Value(F.col(c).cast(stype), kind) for c in df.columns})
-    try:
-        with suppress_sample_output():
-            out = func(row)
-    except Exception:
+    return _trace(func, _Row({c: _Value(F.col(c).cast(stype), kind) for c in df.columns}))
+
+
+def _try_native_cell(func: Callable, df: DataFrame, col: str) -> Column | None:
+    """The native expression of elementwise ``func`` over ``col``: a
+    plain Column call first, then a trace over a :class:`_Value` when
+    the column is integer or floating."""
+    native = _try_native_column(func, F.col(col))
+    if native is not None:
+        return native
+    field = next((f for f in df.schema.fields if f.name == col), None)
+    dtype = _ROW_DTYPES.get(type(field.dataType)) if field is not None else None
+    if dtype is None:
         return None
-    if not isinstance(out, _Value):
-        return None
-    # the row-wise route ships NaN results through Arrow as NULL
-    return F.nanvl(out.col, F.lit(None).cast("double")) if out.kind == "float" else out.col
+    return _trace(func, _Value(F.col(col), "float" if dtype.kind == "f" else "int"))
 
 
 def apply_rows(
@@ -426,9 +537,10 @@ def apply_rows(
     Routes, in order (module docstring), all decided on the call's one
     bounded sample:
 
-    1. **Native**: ``func`` called on a row proxy builds a Catalyst
-       expression (``+ - * /``, unary minus and comparisons over an
-       all-integer/floating frame; IEEE ``/``). Kept when it equals
+    1. **Native**: ``func`` traced on a row proxy builds a Catalyst
+       expression (``+ - * /``, unary minus, comparisons and Python
+       branches on them, over an all-integer/floating frame; IEEE
+       ``/``; :class:`_Value`). Kept when it equals
        the per-row apply on the sample; emitted cast to the sampled
        type, so no Python worker runs.
     2. **Vectorized** (the reference's vectorize-try,
@@ -527,7 +639,8 @@ def applymap(
     """O3 — the same scalar UDF applied to every cell of every column
     (reference: swifter/swifter.py:483-521).
 
-    Native route for each column whose Column expression matches the
+    Native route for each column whose Column or traced expression
+    (Python branches included, as for :func:`apply_series`) matches the
     pandas result on the call's one sample (all columns' candidates are
     evaluated in that one job); otherwise one scalar pandas_udf
     instantiated per inferred return type. All map-side, no shuffle.
@@ -536,7 +649,7 @@ def applymap(
     keys = {c: f"{_NATIVE}{i}" for i, c in enumerate(targets)}
     candidates: dict[str, Column] = {}
     for c in targets:
-        native = None if force_udf else _try_native_column(func, F.col(c))
+        native = None if force_udf else _try_native_cell(func, df, c)
         if native is not None:
             candidates[keys[c]] = native
     sample = sample_pandas(df, targets, candidates) if targets else None

@@ -13,8 +13,15 @@ Same documented caveat as the reference (`README.md:90` there):
 side-effecting UDFs run extra times during inference.
 
 Scale note: the sample is bounded (default 1000 rows) and fetched with
-``limit(n)`` — a driver-side O(1) operation regardless of table size;
-nothing here scales with input rows.
+``limit(n).toPandas()``, which is not free. It runs one job of two
+stages: a scan task per input partition, each stopping after ``n``
+rows, then a single-partition shuffle keeping ``n`` of them (on an
+8-file parquet table at 4 cores: 2 stages, 5 tasks). The cost grows
+with the input partition count, not with rows, and which partitions'
+rows fill the sample depends on the shuffle's arrival order.
+``limit(n).collect()`` would run Spark's incremental take (1 task
+here), but collected Rows turn int32 columns into int64, changing the
+sampled dtypes the route checks read.
 """
 
 from __future__ import annotations

@@ -1,6 +1,10 @@
 """O1/O2/O3 route tests — the Spark analog of the reference's
 vectorized-vs-apply equivalence checks (swifter_tests.py:394-480)."""
 
+import itertools
+import time
+from functools import partial
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -21,19 +25,41 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _by_key(df):
+    keys = ["l_orderkey", "l_linenumber"]
+    return df.toPandas().sort_values(keys).reset_index(drop=True)
+
+
 def test_o1_native_route_equals_udf_route(li):
     """Same UDF through both routes must agree (reference gate
-    swifter.py:313-316)."""
-    f = lambda x: x * 2 + 1  # noqa: E731
-    native = apply_series(li, "l_quantity", f, output_col="v")
-    udf = apply_series(li, "l_quantity", f, output_col="v", force_udf=True)
-    a = native.select("l_orderkey", "l_linenumber", "v").toPandas().sort_values(
-        ["l_orderkey", "l_linenumber"]
-    )
-    b = udf.select("l_orderkey", "l_linenumber", "v").toPandas().sort_values(
-        ["l_orderkey", "l_linenumber"]
-    )
-    pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
+    swifter.py:313-316), Python branches included: the tracer folds
+    them into CASE WHEN, with no Python worker."""
+
+    def guarded(x):
+        try:
+            return 1.0 if x > 5 else 0.0
+        except Exception:  # the tracer's fork is no Exception: not swallowed
+            return -1.0
+
+    funcs = {
+        "arithmetic": lambda x: x * 2 + 1,
+        "ternary": lambda x: True if x > 5 else False,  # the notebook's gt_5_bikes
+        "if_elif_else": lambda x: 1 if x < 10 else (2.5 if x < 30 else x),
+        "and_or_not": lambda x: (x > 5 and x < 20) or not x != 42,
+        "chained": lambda x: 5 < x <= 20,
+        "max": lambda x: max(x - 25, 0),
+        "in_tuple": lambda x: x in (1, 2, 3),
+        "try_except": guarded,
+    }
+    for name, f in funcs.items():
+        native = apply_series(li, "l_quantity", f, output_col="v")
+        assert "ArrowEvalPython" not in _plan(native), name
+        udf = apply_series(li, "l_quantity", f, output_col="v", force_udf=True)
+        pd.testing.assert_frame_equal(
+            _by_key(native.select("l_orderkey", "l_linenumber", "v")),
+            _by_key(udf.select("l_orderkey", "l_linenumber", "v")),
+            obj=name,
+        )
 
 
 def test_o1_native_route_is_native(li):
@@ -44,8 +70,10 @@ def test_o1_native_route_is_native(li):
 
 
 def test_o1_udf_fallback_for_opaque_function(li):
-    """A genuinely un-vectorizable UDF (string branching) takes the
-    Arrow route and still yields correct values."""
+    """Genuinely un-vectorizable UDFs take the Arrow route and still
+    yield correct values: string branching, and Python branches the
+    tracer gives up on (hidden state, an unbounded loop, None or string
+    leaves, truth-testing a number, a swallowed untraceable operation)."""
 
     def weird(x):
         return float(len(str(int(x)))) if x > 10 else -1.0
@@ -55,22 +83,105 @@ def test_o1_udf_fallback_for_opaque_function(li):
     expected = pdf["l_quantity"].apply(weird)
     pd.testing.assert_series_equal(pdf["v"], expected, check_names=False)
 
+    def count_down(x):
+        while x > 0:
+            x = x - 1
+        return x
+
+    def half_traceable(x):
+        try:
+            return 1.0 if x > 5 else x % 4  # % has no traced form ...
+        except Exception:
+            return -1.0  # ... so the trace sees this leaf, and the sample rejects it
+
+    calls = itertools.count()
+
+    def hidden_state(x):
+        # the same test, spelled differently on alternate calls
+        big = x > 5 if next(calls) % 2 else -x < -5
+        return 1.0 if big else 0.0
+
+    fresh = [True]
+
+    def first_call_branches(x):
+        if x > 5:
+            if fresh:  # a re-run returns before the decision it was forced on
+                fresh.clear()
+                return 2.0 if x > 30 else 1.0
+            return 1.0
+        return 0.0
+
+    funcs = {
+        "hidden_state": hidden_state,
+        "first_call_branches": first_call_branches,
+        "while": count_down,
+        "none_leaf": lambda x: None if x > 40 else x,
+        "string_leaf": lambda x: "big" if x > 25 else "small",
+        "truth_of_number": lambda x: 1.0 if x else 0.0,
+        "try_except": half_traceable,
+    }
+    for name, f in funcs.items():
+        start = time.monotonic()
+        out = apply_series(li, "l_quantity", f, output_col="v")
+        assert time.monotonic() - start < 5, name
+        assert "ArrowEvalPython" in _plan(out), name
+        udf = apply_series(li, "l_quantity", f, output_col="v", force_udf=True)
+        pd.testing.assert_frame_equal(
+            _by_key(out.select("l_orderkey", "l_linenumber", "v")),
+            _by_key(udf.select("l_orderkey", "l_linenumber", "v")),
+            obj=name,
+        )
+
+
+def test_traced_branch_sends_null_rows_to_false(spark):
+    """A comparison on NULL is False, so NULL rows take the False
+    branch, as pandas does with NaN: on the series and the row route."""
+    pdf = pd.DataFrame({"i": range(8), "x": [1, None, 7, None, 3, 9, None, 6]})
+    df = spark.createDataFrame(pdf, "i long, x int")
+    cases = [
+        (
+            partial(apply_series, df, "x", lambda x: 1.0 if x > 5 else 0.0, output_col="v"),
+            [0.0, 0.0, 1.0, 0.0, 0.0, 1.0, 0.0, 1.0],
+        ),
+        (
+            partial(apply_series, df, "x", lambda x: 1.0 if x <= 5 else 0.0, output_col="v"),
+            [1.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0],
+        ),
+        (
+            partial(apply_rows, df, lambda r: r.i if r.x > 5 else -1, output_col="v"),
+            [-1, -1, 2, -1, -1, 5, -1, 7],
+        ),
+    ]
+    for build, want in cases:
+        out = build()
+        plan = _plan(out)
+        assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+        got = out.toPandas().sort_values("i").reset_index(drop=True)
+        assert got["v"].tolist() == want
+        udf = build(force_udf=True).toPandas().sort_values("i").reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, udf, check_dtype=False)
+
 
 def test_o2_apply_rows_scalar(li):
-    """Plain arithmetic over numeric columns takes the native route: no
-    MapInPandas node, and the same frame as the forced row-wise path."""
+    """Plain arithmetic over numeric columns, branching included, takes
+    the native route: no MapInPandas node, and the same frame as the
+    forced row-wise path."""
+
+    def unit_or_zero(r):
+        if r.l_quantity > 10:
+            return r["l_extendedprice"] / r["l_quantity"]
+        return 0
+
     f = lambda r: r["l_extendedprice"] / r["l_quantity"]  # noqa: E731
     out = apply_rows(li, f, output_col="unit")
-    assert "MapInPandas" not in _plan(out)
     pdf = out.toPandas()
     expected = pdf["l_extendedprice"] / pdf["l_quantity"]
     pd.testing.assert_series_equal(pdf["unit"], expected, check_names=False)
-    keys = ["l_orderkey", "l_linenumber"]
-    row_wise = apply_rows(li, f, output_col="unit", force_udf=True).toPandas()
-    pd.testing.assert_frame_equal(
-        pdf.sort_values(keys).reset_index(drop=True),
-        row_wise.sort_values(keys).reset_index(drop=True),
-    )
+    for func in (f, unit_or_zero):
+        out = apply_rows(li, func, output_col="unit")
+        assert "MapInPandas" not in _plan(out)
+        row_wise = apply_rows(li, func, output_col="unit", force_udf=True)
+        pd.testing.assert_frame_equal(_by_key(out), _by_key(row_wise))
 
 
 def test_o2_apply_rows_expand(li):
@@ -93,6 +204,17 @@ def test_o3_applymap(li):
         pdf["l_quantity"].sort_values().reset_index(drop=True),
         (src["l_quantity"] ** 2).sort_values().reset_index(drop=True),
         check_names=False,
+    )
+
+    # a branching func traces into one CASE WHEN per column
+    def clip(x):
+        return 25.0 if x > 25 else x
+
+    cols = ["l_quantity", "l_extendedprice"]
+    out = applymap(li, clip, cols=cols)
+    assert "ArrowEvalPython" not in _plan(out)
+    pd.testing.assert_frame_equal(
+        _by_key(out), _by_key(applymap(li, clip, cols=cols, force_udf=True))
     )
 
 
@@ -267,6 +389,33 @@ def test_apply_rows_native_divide_is_ieee_past_the_sample(spark):
     assert ratio.loc[ratio["a"] == 0, "q"].isna().all()
     assert compare.loc[compare["a"] < 0, "q"].all()  # -(-1) / 0 is inf
     assert not compare.loc[compare["a"] >= 0, "q"].any()  # -inf, or NaN from 0 / 0
+
+
+def test_apply_rows_native_int_overflow_raises_past_the_sample(spark):
+    """Integer arithmetic on the native route stays in the column's
+    type under ANSI: an int32 product that overflows only past the
+    sample raises ARITHMETIC_OVERFLOW, where the row-wise route's numpy
+    wraps silently. Raising is the chosen behavior: a loud error beats
+    a silently wrong value."""
+    import numpy as np
+
+    from sparkswift.operators.apply import apply_rows
+
+    # one partition, so the sample's limit sees only the first rows; a
+    # range, not a local relation, which the optimizer would evaluate
+    big = F.when(F.col("id") < 1500, F.col("id") % 7).otherwise(70_000).cast("int")
+    df = spark.range(0, 3000, 1, 1).select(
+        F.col("id").cast("int").alias("i"), big.alias("a"), big.alias("b")
+    )
+    f = lambda r: r.a * r.b  # noqa: E731
+    out = apply_rows(df, f, output_col="p")
+    assert "MapInPandas" not in _plan(out)
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        out.collect()
+    with np.errstate(over="ignore"):
+        wrapped = int(np.int32(70_000) * np.int32(70_000))
+    row_wise = apply_rows(df, f, output_col="p", force_udf=True).toPandas()
+    assert set(row_wise.loc[row_wise["i"] >= 1500, "p"]) == {wrapped}
 
 
 def test_apply_rows_vectorize_gate_rejects_row_scalar(spark, sf_dir):
@@ -480,9 +629,19 @@ ONE_SAMPLE_CASES = {
     "applymap_udf": (
         lambda li, spark: applymap(
             li.select("l_quantity", "l_extendedprice", "l_orderkey"),
-            lambda x: 1.0 if x > 5 else 0.0,
+            lambda x: float(abs(x)),  # neither native attempt has an abs
         ),
         "ArrowEvalPython",
+    ),
+    "series_branch_native": (
+        lambda li, spark: apply_series(li, "l_quantity", lambda x: True if x > 5 else False),
+        None,
+    ),
+    "rows_branch_native": (
+        lambda li, spark: apply_rows(
+            li, lambda r: r.l_extendedprice / r.l_quantity if r.l_quantity > 10 else 0
+        ),
+        None,
     ),
 }
 
