@@ -268,12 +268,14 @@ class _Fork(BaseException):
 
 class _Run:
     """One traced call of ``func``: the decisions forced on it, each
-    with the condition (string form) it was forced on."""
+    with the condition (string form) it was forced on, and whether
+    ``/`` is IEEE (numpy scalars) or raises on a zero divisor (Python
+    scalars)."""
 
-    __slots__ = ("path", "used")
+    __slots__ = ("path", "used", "ieee")
 
-    def __init__(self, path: list[tuple[str, bool]]):
-        self.path, self.used = path, 0
+    def __init__(self, path: list[tuple[str, bool]], ieee: bool):
+        self.path, self.used, self.ieee = path, 0, ieee
 
     def decide(self, cond: Column) -> bool:
         if self.used == len(self.path):
@@ -292,39 +294,108 @@ class _TraceState(threading.local):
 _TRACE = _TraceState()
 
 
-class _Value:
+def _abort_trace() -> None:
+    """Inside a traced run, give up on the whole trace with
+    ``_Fork(None)``. Every operation a stand-in cannot trace calls this
+    before raising its ordinary error: ``_Fork`` is no ``Exception``, so
+    a ``try/except Exception`` in ``func`` cannot catch the give-up and
+    hand the trace its fallback as a leaf for rows the sample never
+    reaches. Outside a trace it returns."""
+    if _TRACE.run is not None:
+        raise _Fork(None)
+
+
+class _Opaque:
+    """Base of the traced stand-ins: each operation a subclass does not
+    define aborts the trace (:func:`_abort_trace`), then raises
+    TypeError."""
+
+    __slots__ = ()
+
+    def _untraceable(self, *args, **kwargs):
+        _abort_trace()
+        raise TypeError(f"operation not supported on a traced {type(self).__name__}")
+
+    def __getattr__(self, name):
+        _abort_trace()
+        raise AttributeError(name)
+
+    def __repr__(self):  # str(x), f"{x}": a string built from a traced value
+        _abort_trace()
+        return object.__repr__(self)
+
+    def __format__(self, spec):
+        _abort_trace()
+        return object.__format__(self, spec)
+
+
+for _name in (
+    "add radd sub rsub mul rmul truediv rtruediv mod rmod pow rpow floordiv"
+    " rfloordiv divmod rdivmod matmul rmatmul and rand or ror xor rxor lshift"
+    " rlshift rshift rrshift neg pos invert abs lt le gt ge eq ne bool hash"
+    " float int index complex round trunc floor ceil len iter contains"
+    " getitem call array array_ufunc"
+).split():
+    setattr(_Opaque, f"__{_name}__", _Opaque._untraceable)
+
+# numpy ufuncs a traced value supports: its method when it is the first
+# operand, and when it is the second (numpy calls the value's
+# __array_ufunc__ for e.g. ``np.float64(2.0) - x``)
+_UFUNCS = {
+    np.add: ("__add__", "__radd__"),
+    np.subtract: ("__sub__", "__rsub__"),
+    np.multiply: ("__mul__", "__rmul__"),
+    np.true_divide: ("__truediv__", "__rtruediv__"),
+    np.negative: ("__neg__", None),
+    np.less: ("__lt__", "__gt__"),
+    np.less_equal: ("__le__", "__ge__"),
+    np.greater: ("__gt__", "__lt__"),
+    np.greater_equal: ("__ge__", "__le__"),
+    np.equal: ("__eq__", "__eq__"),
+    np.not_equal: ("__ne__", "__ne__"),
+}
+
+
+class _Value(_Opaque):
     """One numeric value of a pandas row or cell, held as a Column
     expression.
 
     Supports ``+ - * /``, unary minus and comparisons with other values
-    and with int/float scalars, following numpy's semantics on the
-    value's dtype; anything else raises, so ``func`` falls through to
-    the pandas routes. ``/`` is IEEE division: a zero divisor gives
-    ±inf or NaN as numpy does, where Spark's ANSI mode would raise
-    ``DIVIDE_BY_ZERO``. Comparisons involving NaN or NULL are False
-    (``!=``: True), as numpy's are for NaN — pandas sees SQL NULLs as
-    NaN. Array conversion (``pd.isna``, numpy ufuncs) raises.
+    and with int/float scalars, also as numpy ufuncs. A cell value
+    (``apply_series``, ``applymap``) follows Python's int and float, as
+    ``Series.apply`` hands them to ``func``: it computes in long or
+    double, and ``/`` by zero raises, as ``ZeroDivisionError`` does. A
+    row value (``apply_rows``) follows numpy's scalars of the row's
+    dtype: ``/`` is IEEE division, a zero divisor gives ±inf or NaN,
+    where Spark's ANSI mode would raise ``DIVIDE_BY_ZERO``. Comparisons
+    involving NaN or NULL are False (``!=``: True), as they are for NaN
+    in Python and numpy — pandas sees SQL NULLs as NaN.
 
-    Integer ``+ - *`` compute in the column's integer type under
-    Spark's ANSI mode: a result past its range raises
-    ``ARITHMETIC_OVERFLOW`` where numpy wraps silently. That is kept on
-    purpose — a loud error beats a silently wrong value — and the sample
-    cannot see it when only rows past the sample overflow.
+    Integer overflow raises ``ARITHMETIC_OVERFLOW`` under ANSI mode. On
+    the row route integer ``+ - *`` compute in the row's integer type,
+    where numpy wraps silently; on the cell route they compute in long,
+    where a Python int grows. That is kept on purpose — a loud error
+    beats a silently wrong value — and the sample cannot see it when
+    only rows past the sample overflow.
 
     Python branching is traced (:func:`_trace`): a comparison result
     may be truth-tested, so ``if``/``elif``/``else``, ternaries,
     ``and``/``or``/``not``, chained comparisons, ``max``/``min`` and
     ``x in (1, 2)`` fold into one ``CASE WHEN``. A comparison result is
     never NULL, so ``CASE WHEN`` takes the branch Python takes on a NaN
-    cell. Truth-testing a number (``if x:``) raises. The trace gives up
-    past 16 leaves or a branch depth of 8, when a re-run meets another
-    condition than the one forced at the same position or returns
-    before reaching it (hidden state), or when a leaf is not a traced
-    value or a Python bool, int or float (``None``, strings, bools
-    mixed with numbers)."""
+    cell. Anything else (``%``, ``**``, ``abs``, ``float(x)``, other
+    ufuncs, attributes, ``str(x)``, truth-testing a number) gives up on
+    the whole trace, even inside a ``try/except Exception`` in ``func``
+    (:func:`_abort_trace`), so ``func`` takes the pandas routes. The
+    trace also gives up past 16 leaves or a branch depth of 8, when a
+    re-run meets another condition than the one forced at the same
+    position or returns before reaching it (hidden state), or when a
+    leaf is not a traced value or a Python bool, int or float
+    (``None``, strings, bools mixed with numbers). Type checks
+    (``isinstance(x, int)``) see the stand-in, not a number: only the
+    sample check guards against them."""
 
     __slots__ = ("col", "kind")
-    __array_ufunc__ = None  # numpy defers binary ops to the reflected ones here
 
     def __init__(self, col: Column, kind: str):
         self.col, self.kind = col, kind  # kind: "int" | "float" | "bool"
@@ -333,18 +404,18 @@ class _Value:
     def lift(v) -> "_Value":
         if isinstance(v, _Value):
             return v
-        if isinstance(v, (bool, np.bool_)):
-            raise TypeError("bool operand")
-        if isinstance(v, (int, np.integer)):
-            return _Value(F.lit(int(v)), "int")
-        if isinstance(v, (float, np.floating)):
-            return _Value(F.lit(float(v)), "float")
+        if not isinstance(v, (bool, np.bool_)):
+            if isinstance(v, (int, np.integer)):
+                return _Value(F.lit(int(v)), "int")
+            if isinstance(v, (float, np.floating)):
+                return _Value(F.lit(float(v)), "float")
+        _abort_trace()
         raise TypeError(f"unsupported operand {type(v).__name__}")
 
     def _pair(self, other, reflected: bool = False) -> tuple["_Value", "_Value"]:
         a, b = self, _Value.lift(other)
         if "bool" in (a.kind, b.kind):
-            raise TypeError("arithmetic on a comparison result")
+            return self._untraceable()  # arithmetic on a comparison result
         return (b, a) if reflected else (a, b)
 
     def _num(self, other, op: Callable, reflected: bool = False) -> "_Value":
@@ -354,6 +425,10 @@ class _Value:
     def _div(self, other, reflected: bool = False) -> "_Value":
         a, b = self._pair(other, reflected)
         x, y = a.col.cast("double"), b.col.cast("double")
+        run = _TRACE.run
+        if run is not None and not run.ieee:  # Python scalars: a zero divisor raises
+            zero = F.raise_error(F.lit("ZeroDivisionError: division by zero in an applied func"))
+            return _Value(F.when(y == 0, zero).otherwise(x / y), "float")
         # x * y**-1 is ±inf or NaN exactly when x / y is in IEEE
         # arithmetic, sign of a zero divisor included
         return _Value(F.when(y == 0, x * F.pow(y, F.lit(-1.0))).otherwise(x / y), "float")
@@ -392,7 +467,7 @@ class _Value:
 
     def __neg__(self):
         if self.kind == "bool":
-            raise TypeError("negating a comparison result")
+            return self._untraceable()  # negating a comparison result
         return _Value(-self.col, self.kind)
 
     def __lt__(self, o):
@@ -413,21 +488,27 @@ class _Value:
     def __ne__(self, o):
         return self._cmp(o, operator.ne, when_missing=True)
 
-    __hash__ = None
+    __hash__ = _Opaque._untraceable  # defining __eq__ would set it to None
 
     def __bool__(self):
         run = _TRACE.run
         if self.kind != "bool" or run is None:
-            raise TypeError("truth value of a traced number, or outside a trace")
+            return self._untraceable()  # a traced number, or outside a trace
         return run.decide(self.col)
 
-    def __array__(self, *args, **kwargs):
-        raise TypeError("array conversion of a traced row value")
+    def __array_ufunc__(self, ufunc, method, *inputs, **kwargs):
+        names = _UFUNCS.get(ufunc)
+        if names is None or method != "__call__" or kwargs:
+            return self._untraceable()
+        if inputs[0] is self:
+            return getattr(self, names[0])(*inputs[1:])
+        return getattr(self, names[1])(inputs[0])
 
 
-class _Row:
+class _Row(_Opaque):
     """Stands in for the pandas row Series: ``row["c"]`` and ``row.c``
-    give the column's :class:`_Value`; anything else raises."""
+    give the column's :class:`_Value`; anything else gives up on the
+    trace, as :class:`_Value` does."""
 
     __slots__ = ("_values",)
 
@@ -437,16 +518,18 @@ class _Row:
     def __getitem__(self, key):
         if isinstance(key, str) and key in self._values:
             return self._values[key]
+        _abort_trace()
         raise KeyError(key)
 
     def __getattr__(self, name):
         # Series attributes (row.name, row.size, …) shadow columns in pandas
         if name.startswith("_") or hasattr(pd.Series, name) or name not in self._values:
+            _abort_trace()
             raise AttributeError(name)
         return self._values[name]
 
 
-def _trace(func: Callable, arg) -> Column | None:
+def _trace(func: Callable, arg, ieee: bool) -> Column | None:
     """The expression ``func(arg)`` builds over :class:`_Value` stand-ins,
     following Python branches; None when ``func`` is not traceable.
 
@@ -454,12 +537,14 @@ def _trace(func: Callable, arg) -> Column | None:
     the forced decisions raises :class:`_Fork`, and the path is re-run
     with that decision forced True, then False. The paths fold into
     nested ``F.when(cond, then).otherwise(else_)``. Gives up on the
-    rules and bounds of :class:`_Value`'s docstring. Float results map
-    NaN to NULL, as the row-wise routes' Arrow conversion does."""
+    rules and bounds of :class:`_Value`'s docstring. ``ieee``: ``/``
+    follows numpy's scalars (row values), else Python's (cell values).
+    Float results map NaN to NULL, as the row-wise routes' Arrow
+    conversion does."""
     kinds: list[str] = []  # one per leaf
 
     def explore(path: list[tuple[str, bool]]) -> Column:
-        run = _TRACE.run = _Run(path)
+        run = _TRACE.run = _Run(path, ieee)
         try:
             out = func(arg)
         except _Fork as fork:
@@ -503,13 +588,16 @@ def _try_native_row(func: Callable, df: DataFrame) -> Column | None:
     row_dtype = np.result_type(*dtypes)
     kind = "float" if row_dtype.kind == "f" else "int"
     stype = spark_type_for_dtype(row_dtype)
-    return _trace(func, _Row({c: _Value(F.col(c).cast(stype), kind) for c in df.columns}))
+    row = _Row({c: _Value(F.col(c).cast(stype), kind) for c in df.columns})
+    return _trace(func, row, ieee=True)
 
 
 def _try_native_cell(func: Callable, df: DataFrame, col: str) -> Column | None:
     """The native expression of elementwise ``func`` over ``col``: a
     plain Column call first, then a trace over a :class:`_Value` when
-    the column is integer or floating."""
+    the column is integer or floating. The traced value is cast to
+    long or double, since ``Series.apply`` hands ``func`` Python ints
+    and floats whatever the column's width."""
     native = _try_native_column(func, F.col(col))
     if native is not None:
         return native
@@ -517,7 +605,9 @@ def _try_native_cell(func: Callable, df: DataFrame, col: str) -> Column | None:
     dtype = _ROW_DTYPES.get(type(field.dataType)) if field is not None else None
     if dtype is None:
         return None
-    return _trace(func, _Value(F.col(col), "float" if dtype.kind == "f" else "int"))
+    kind = "float" if dtype.kind == "f" else "int"
+    value = _Value(F.col(col).cast("double" if kind == "float" else "long"), kind)
+    return _trace(func, value, ieee=False)
 
 
 def apply_rows(
