@@ -337,6 +337,7 @@ for _name in (
     " getitem call array array_ufunc"
 ).split():
     setattr(_Opaque, f"__{_name}__", _Opaque._untraceable)
+del _name
 
 # numpy ufuncs a traced value supports: its method when it is the first
 # operand, and when it is the second (numpy calls the value's
