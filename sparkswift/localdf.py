@@ -30,10 +30,6 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     assert isinstance(schema, StructType)
-    import os
-
-    if os.environ.get("SPARK_GRAFT_LOCALDF", "1") == "0":  # A/B gate (r16)
-        return spark.createDataFrame(list(rows), schema)
     if not rows:
         return spark.createDataFrame([], schema)
     import pandas as pd

@@ -33,21 +33,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from sparkswift.localdf import local_df
+from sparkswift.operators.spread import spread
 
 from sparkswift.operators.text import fingerprint
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition before compute-heavy per-row expression work.
-    Small/single-file inputs otherwise arrive as ONE partition (one
-    row group -> one task) and the whole shingle/signature computation
-    runs on a single core; the width is input-size-adaptive
-    (operators.spread — tiny frames stop paying a full 32-task wave of
-    serialized task overhead) and at real scale inputs already have
-    many partitions, so cluster plans are unchanged."""
-    from sparkswift.operators.spread import spread
-
-    return spread(df)
 
 
 def dedup_exact(
@@ -106,12 +94,12 @@ def fuzzy_join(
     # census, the anti-join and the cross join — the shingling
     # expression tree re-ran per consumer otherwise (the d2/d18
     # pathology; guide §2.4)
-    sl = _spread(
+    sl = spread(
         left.select(F.col(left_id).alias("id_l"), F.col(left_text).alias("__t"))
     ).select("id_l", hashed_shingles("__t", k).alias("sh")).withColumn(
         "n_l", F.size("sh").cast("bigint")
     ).localCheckpoint()
-    sr = _spread(
+    sr = spread(
         right.select(F.col(right_id).alias("id_r"), F.col(right_text).alias("__t"))
     ).select("id_r", hashed_shingles("__t", k).alias("sh")).withColumn(
         "n_r", F.size("sh").cast("bigint")
@@ -290,7 +278,7 @@ def ngram_jaccard_pairs(
     # plan; guide §2.4). Exploding the checkpointed arrays per
     # consumer is cheap; re-hashing the text is not.
     sh = (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col)))
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select("id", mk(text_col, k).alias("sh"))
         .withColumn("n_sh", F.size("sh").cast("bigint"))
         .localCheckpoint()
@@ -362,7 +350,7 @@ def containment_pairs(
     # plan; guide §2.4). Exploding the checkpointed arrays per
     # consumer is cheap; re-hashing the text is not.
     sh = (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col)))
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select("id", mk(text_col, k).alias("sh"))
         .withColumn("n_sh", F.size("sh").cast("bigint"))
         .localCheckpoint()
@@ -514,7 +502,7 @@ def minhash_lsh_pairs(
     """
     rows_per_band = num_hashes // bands
     sh = sig_frame if sig_frame is not None else (
-        _spread(df.select(F.col(id_col).alias("id"), F.col(text_col)))
+        spread(df.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select("id", hashed_shingles(text_col, k).alias("hsh"))
         .withColumn("sig", _minhash_from_hashes(F.col("hsh"), num_hashes, 0))
         .localCheckpoint()
@@ -625,7 +613,7 @@ def simhash_pairs(
 
     blocks = max_hamming + 1
     bits = 64 // blocks
-    sh = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col))).select(
+    sh = spread(df.select(F.col(id_col).alias("id"), F.col(text_col))).select(
         "id",
         F.transform(tokens(text_col), lambda t: F.xxhash64(t)).alias("__hashes"),
     ).select("id", simhash64("__hashes").alias("sim"))
@@ -1136,12 +1124,12 @@ def leak_report(
     # work to a single task (measured: 3.45 s one-task job in p17;
     # guide §2.3)
     bench_sh = (
-        _spread(benchmark.select(F.col(text_col)))
+        spread(benchmark.select(F.col(text_col)))
         .select(F.explode(mk(text_col, k)).alias("s"))
         .distinct()
         .withColumn("__hit", F.lit(1))
     )
-    doc_sh = _spread(docs.select(F.col(id_col), F.col(text_col))).select(
+    doc_sh = spread(docs.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), F.explode(F.array_distinct(mk(text_col, k))).alias("s")
     )
     per_doc = (
@@ -1283,7 +1271,7 @@ def neardup_incremental(
     """
     spark = new_docs.sparkSession
     sh = (
-        _spread(new_docs.select(F.col(id_col).alias("id"), F.col(text_col)))
+        spread(new_docs.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select("id", hashed_shingles(text_col, k).alias("hsh"))
         .withColumn("sig", _minhash_from_hashes(F.col("hsh"), num_hashes, 0))
         .localCheckpoint()
@@ -1485,7 +1473,7 @@ def substring_dedup(
         *[F.col(c) for c in keep_cols],
         _tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("__toks"),
     )
-    base = _spread(base)
+    base = spread(base)
     n = F.size("__toks")
 
     # (id, pos, hash) for every window start; docs under `window`

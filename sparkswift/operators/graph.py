@@ -11,52 +11,10 @@ state beyond the loop counter — the 100 TB shape for power iteration.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _loop_width_rows(df: DataFrame, n_rows: int, floor: int = 2) -> int:
-    """Scale-adaptive width for iterative-loop frames, derived from a
-    KNOWN row count (guide §2: partitioning follows data volume, never
-    a constant tuned for either local mode or the cluster; optimizer
-    size ESTIMATES are useless here — a join output estimates in the
-    TBs for sub-million-row frames). Every loop job pays the measured
-    ~10-12 ms/task serialized scheduling floor PER ROUND, so a
-    fixture-scale edge frame at defaultParallelism burns ~0.35 s of
-    pure task overhead per job × 2-3 jobs × rounds with nothing to
-    parallelize (PERF r15: g6/g5/g2 ran up to 30% FASTER on 8 cores
-    than 32 at sf0.1). A real corpus's count pins the cap, so cluster
-    plans are unchanged. All loop operators using this are
-    integer-exact or invariant-gated (pagerank's mass/zero laws hold
-    under any summation order), so width never changes a declared
-    result. ``SPARK_GRAFT_LOOP_ROWS_PER_TASK`` tunes the per-task row
-    budget (default 100k ≈ several ms of join+agg work per task —
-    the r16 warm-median sweep: 100k beat 250k and full width on
-    g1/g6, ~flat on g2)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    rpt = int(os.environ.get("SPARK_GRAFT_LOOP_ROWS_PER_TASK", "100000"))
-    return max(floor, min(n, -(-n_rows // rpt)))
-
-
-def _loop_prepart(df: DataFrame, *cols: str, n_rows: int | None = None) -> DataFrame:
-    """Pre-partition a loop-static frame on the loop join key ONCE so
-    no iteration re-exchanges it (guide §2.4); explicit width so AQE
-    cannot coalesce the loop to one task (the o9b lesson). When the
-    caller has the frame's row count in hand the width is
-    scale-adaptive (:func:`_loop_width_rows`); otherwise full cluster
-    width. A/B gate (r16): ``SPARK_GRAFT_GRAPH_PREPART=0`` reverts to
-    the r14 unpartitioned shape so the cold-run cost can be
-    measured."""
-    if os.environ.get("SPARK_GRAFT_GRAPH_PREPART", "1") == "0":
-        return df
-    n_part = (
-        _loop_width_rows(df, n_rows)
-        if n_rows is not None
-        else df.sparkSession.sparkContext.defaultParallelism
-    )
-    return df.repartition(n_part, *[F.col(c) for c in cols])
+from sparkswift.operators.spread import prepart, width
 
 
 def pagerank(
@@ -177,8 +135,8 @@ def pagerank(
     # e_deg has exactly e's rows (deg attach is 1:1); e is
     # materialized, so the count is a cheap in-memory scan that buys
     # the row-count-honest loop width for every iteration's jobs
-    e_deg = _loop_prepart(
-        e.join(out_deg, "src"), loop_key, n_rows=e.count()
+    e_deg = prepart(
+        e.join(out_deg, "src"), [loop_key], rows=e.count()
     ).localCheckpoint()
     if seeds is not None:
         seed_nodes = (
@@ -672,12 +630,12 @@ def _lpa_body(edges, src, dst, max_iter, label_broadcast_limit,
     # separate union-over-e pass for nodes disappears (guide §1.2 /
     # §2.4; measured r16: the nodes job dropped from a 96-task union
     # + exchange to a 32-task scan of the adj checkpoint). Width is
-    # input-size-adaptive (_loop_width): every round pays the per-task
+    # the spread "loop" tier: every round pays the per-task
     # scheduling floor on 2-3 jobs over these frames.
     # e is materialized (localCheckpoint above), so this count is a
     # cheap in-memory scan — it buys the row-count-honest loop width
     # for every round's jobs (adj holds both directions: 2× e's rows)
-    n_part = _loop_width_rows(e, 2 * e.count())
+    n_part = width(e, "loop", rows=2 * e.count())
     adj = (
         e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionAll(e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
@@ -912,8 +870,8 @@ def bfs_distances(
     # when the frontier is not broadcast-sized, every round's join
     # reuses this partitioning instead of re-exchanging the edge list
     # (guide §2.4); explicit count so AQE can't coalesce to one task
-    adj = _loop_prepart(
-        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))), "u"
+    adj = prepart(
+        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))), ["u"]
     ).localCheckpoint()
     dist = (
         sources.select(F.col("node").cast("bigint").alias("node"))
@@ -992,9 +950,9 @@ def sssp_distances(
         .distinct()
     )
     # same loop-static pre-partitioning as bfs_distances (guide §2.4)
-    adj = _loop_prepart(
+    adj = prepart(
         e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")),
-        "u",
+        ["u"],
     ).localCheckpoint()
     dist = (
         sources.select(F.col("node").cast("bigint").alias("node"))

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparkswift.operators.rolling import _prepart
+from sparkswift.operators.spread import prepart
 from sparkswift.plans.inference import schema_from_pandas
 
 
@@ -154,8 +154,8 @@ def groupby_apply(
 
     # explicit key-repartition: the groupBy reuses it (no second
     # exchange) and AQE cannot coalesce the grouped-UDF stage into
-    # one serialized task (the o9b lesson — see rolling._prepart)
-    out = _prepart(work, keys).groupBy(*keys).applyInPandas(_run_one, schema)
+    # one serialized task (the o9b lesson — see spread.prepart)
+    out = prepart(work, keys).groupBy(*keys).applyInPandas(_run_one, schema)
     return out.orderBy(*keys) if sort_output else out
 
 
@@ -298,8 +298,8 @@ def cogroup_apply(
     # coalesce the cogrouped stage to one task (o8 measured 12.2 s on
     # 3 tasks before this — the o9b lesson's cogroup face)
     out = (
-        _prepart(lwork, keys).groupBy(*keys)
-        .cogroup(_prepart(rwork, keys).groupBy(*keys))
+        prepart(lwork, keys).groupBy(*keys)
+        .cogroup(prepart(rwork, keys).groupBy(*keys))
         .applyInPandas(_run_one, schema)
     )
     return out.orderBy(*keys) if sort_output else out

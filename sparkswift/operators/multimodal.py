@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkswift.operators.spread import spread
+
 METADATA_SCHEMA = T.StructType(
     [
         T.StructField("modality", T.StringType(), False),
@@ -64,37 +66,6 @@ METADATA_SCHEMA = T.StructType(
         T.StructField("n_frames", T.IntegerType(), True),
     ]
 )
-
-
-def _spread_light(df: DataFrame) -> DataFrame:
-    """Cheap-synth tier (operators.spread.LIGHT_TASK_BYTES): header
-    stubs and tiny fixed-geometry payloads (mp3 frame walks, AVI/MP4
-    stubs, WebP headers, 18x16 dHash PGMs) whose decode is a few
-    microseconds per row — full width cost 0.3-2.3 s/query in
-    exchange + task overhead at sf0.1 (measured r16: mm32 6.7->3.7 s,
-    st34 5.0->4.3 s, d20 3.3->2.9 s cold) with nothing to
-    parallelize. Real corpora scan wide, so cluster plans are
-    unchanged."""
-    from sparkswift.operators.spread import spread_light
-
-    return spread_light(df)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread the synth input across the cluster before the
-    per-row-heavy payload/encode Arrow stage: the documents fixture is
-    ONE parquet file -> one scan partition, and pandas_udf/mapInPandas
-    preserve partitioning, so without this every synth + decode chain
-    ran as a SINGLE task (measured: t26's sibling pattern spent 6 s
-    single-core on a 32-core host; guide §2.3). No-op when the caller
-    already spread (d19/d21/mm32 repartition upstream). Values are
-    per-row id arithmetic — layout cannot change them. Streaming
-    inputs (st31/st36/st39 run synth inside the streaming plan) pass
-    through untouched: micro-batch parallelism comes from the source,
-    and `.rdd` is illegal on a streaming frame."""
-    from sparkswift.operators.spread import spread
-
-    return spread(df)
 
 
 def attach_payload(
@@ -2284,7 +2255,7 @@ def synth_wav_deep_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def synth_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2306,7 +2277,7 @@ def synth_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2341,7 +2312,7 @@ def synth_wav_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -2585,7 +2556,7 @@ def synth_png_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2627,7 +2598,7 @@ def synth_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2699,7 +2670,7 @@ def synth_jpeg420_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2749,7 +2720,7 @@ def synth_png_palette_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2824,7 +2795,7 @@ def synth_png_mixed_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2872,7 +2843,7 @@ def synth_jpeg_prog_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -3428,7 +3399,7 @@ def synth_avi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -3526,7 +3497,7 @@ def synth_mjpeg_avi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -3625,7 +3596,7 @@ def synth_netpbm_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -3677,7 +3648,7 @@ def synth_gif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -3748,7 +3719,7 @@ def synth_png_gray_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4315,7 +4286,7 @@ def synth_tiff_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4493,7 +4464,7 @@ def synth_qoi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4819,7 +4790,7 @@ def synth_tiff_lzw_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4863,7 +4834,7 @@ def synth_jpeg_lossless_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4997,7 +4968,7 @@ def synth_au_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -5032,7 +5003,7 @@ def synth_au_float_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def synth_au_alaw_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5055,7 +5026,7 @@ def synth_au_alaw_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -5102,7 +5073,7 @@ def synth_tiff_tiled_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -5256,7 +5227,7 @@ def synth_bmp8_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -5864,7 +5835,7 @@ def synth_flac_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -5916,7 +5887,7 @@ def synth_gif_anim_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -6145,7 +6116,7 @@ def synth_mp3_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread_light(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return spread(df, "light").withColumn("payload", make(F.col(id_col))).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -6262,7 +6233,7 @@ def synth_dhash_pgm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread_light(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
 
 
 def image_dhash_incremental(
@@ -6554,7 +6525,7 @@ def synth_dhash_noisy_pgm_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 # --- video: container-layer census (ANY codec, zero decode) ----------------
@@ -6766,7 +6737,7 @@ def synth_avi_stub_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread_light(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
 
 
 # --- video: MP4 / ISO-BMFF container census (the dominant wrapper) ---------
@@ -6981,7 +6952,7 @@ def synth_mp4_stub_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread_light(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
 
 
 # --- TIFF CCITT Group 3 / Group 4 (ITU-T T.4 / T.6) ------------------------
@@ -7498,7 +7469,7 @@ def synth_tiff_ccitt_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def tiff_bilevel_census(
@@ -7643,7 +7614,7 @@ def synth_tiff_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def encode_tiff_deep(
@@ -7746,7 +7717,7 @@ def synth_tiff_deep_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 # --- WebP: container/header census (zero decode) ---------------------------
@@ -7926,7 +7897,7 @@ def synth_webp_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread_light(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
 
 
 # --- Ogg/Vorbis: container census (zero decode) ----------------------------
@@ -8124,7 +8095,7 @@ def synth_ogg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -8359,7 +8330,7 @@ def synth_wav_ima_adpcm_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def wav_adpcm_census(
@@ -8614,7 +8585,7 @@ def synth_wav_ms_adpcm_payload(
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def wav_ms_adpcm_census(
@@ -8909,7 +8880,7 @@ def synth_mkv_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def matroska_census(
@@ -9158,7 +9129,7 @@ def synth_aiff_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def aiff_census(
@@ -9358,7 +9329,7 @@ def synth_id3_mp3_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         return ids.map(one)
 
-    return _spread(df).withColumn("payload", make(F.col(id_col)))
+    return spread(df).withColumn("payload", make(F.col(id_col)))
 
 
 def id3_tags_census(

@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkswift.operators.spread import prepart, width
+
 _BUILTIN = {
     "sum": F.sum,
     "mean": F.avg,
@@ -43,43 +45,6 @@ _BUILTIN = {
     "std": F.stddev_samp,
     "var": F.var_samp,
 }
-
-
-def _prepart(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Explicit hash-repartition on the group key before a grouped
-    Arrow UDF. The following ``groupBy(keys)`` reuses the partitioning
-    (HashPartitioning satisfies the UDF's clustered distribution — no
-    second exchange), and because the partition count is explicit AQE
-    cannot coalesce the tiny post-shuffle stage into one task and
-    serialize every per-group kernel on one core (the o9b lesson,
-    NOTES r14: a bare grouped UDF fed by a small shuffle ran 1500
-    groups on a single task). ``defaultParallelism`` tracks the
-    cluster size, so the same code is right at 100 TB."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(k) for k in keys])
-
-
-def _chain_rounds(df: DataFrame, floor_: int = 2, cap: int = 64) -> int:
-    """Scale-adaptive carry-chain round count (``n_buckets=None``).
-
-    Rounds are SEQUENTIAL — each is a full job barrier — so fewer is
-    strictly faster; the only reason to add rounds is bounding one
-    key's slice to task memory at scale. One round per
-    ``SPARK_GRAFT_CHAIN_ROUND_BYTES`` (default 256 MB) of
-    optimizer-estimated input, floored at 2 so the continued-carry
-    path is always exercised (the bucketing-invariance law makes any
-    count bit-identical — pytest-pinned). On a cluster raise the env
-    only if per-key slice volume outgrows task memory."""
-    import os
-
-    budget = int(
-        os.environ.get("SPARK_GRAFT_CHAIN_ROUND_BYTES", str(256 << 20))
-    )
-    try:
-        sz = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 8
-    return max(floor_, min(cap, -(-sz // budget)))
 
 
 def _parse_duration_us(window: str) -> int:
@@ -533,7 +498,7 @@ def rolling_apply_udf(
                 )
             return pdf
 
-        return _prepart(df, list(partition_by)).groupBy(
+        return prepart(df, partition_by).groupBy(
             *partition_by
         ).applyInPandas(_per_entity, schema)
 
@@ -610,7 +575,7 @@ def ewm_mean(
         )
         return pdf
 
-    return _prepart(df, keys).groupBy(*keys).applyInPandas(per_group, schema)
+    return prepart(df, keys).groupBy(*keys).applyInPandas(per_group, schema)
 
 
 def ewm_mean_multi(
@@ -643,7 +608,7 @@ def ewm_mean_multi(
             pdf[col] = base.ewm(alpha=a, adjust=adjust).mean()
         return pdf
 
-    return _prepart(df, keys).groupBy(*keys).applyInPandas(per_group, schema)
+    return prepart(df, keys).groupBy(*keys).applyInPandas(per_group, schema)
 
 
 def _cusum_reset_scan(v, allowance: int, threshold: int, carry: int):
@@ -730,7 +695,7 @@ def cusum_alerts(
         F.unix_micros(F.col(ts_col)).alias("__t_us"),
         F.floor(F.col(value_col) * scale).cast("bigint").alias("v_scaled"),
     )
-    out = _prepart(base, [key_col]).groupBy(key_col).applyInPandas(
+    out = prepart(base, [key_col]).groupBy(key_col).applyInPandas(
         per_group, schema
     )
     return out.withColumnRenamed("__t_us", "t_us")
@@ -812,7 +777,7 @@ def ewm_mean_multi_global(
         if not 0.0 < a <= 1.0:
             raise ValueError("alpha must be in (0, 1]")
     if n_buckets is None:
-        n_buckets = _chain_rounds(df)
+        n_buckets = width(df, "rounds")
     if n_buckets > max_rounds:
         raise ValueError(f"n_buckets={n_buckets} > max_rounds={max_rounds}")
     tcol = ts_col or order_by[0]
@@ -1022,7 +987,7 @@ def cusum_stat_global(
         pdf["__cin"] = cins
         return pdf[[key_col, "__bkt", "__cin"]]
 
-    carries = _prepart(summ, [key_col]).groupBy(key_col).applyInPandas(
+    carries = prepart(summ, [key_col]).groupBy(key_col).applyInPandas(
         fold, fold_schema
     )
     out = rows.join(carries, [key_col, "__bkt"]).withColumn(
@@ -1068,7 +1033,7 @@ def cusum_alerts_global(
     import numpy as np
 
     if n_buckets is None:
-        n_buckets = _chain_rounds(df)
+        n_buckets = width(df, "rounds")
     if n_buckets > max_rounds:
         raise ValueError(f"n_buckets={n_buckets} > max_rounds={max_rounds}")
 

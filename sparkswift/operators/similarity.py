@@ -20,18 +20,12 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from sparkswift.localdf import local_df
-
-# A/B gates (optimization round 16): default = current shape; =0
-# reverts to the r14 shape so the cold-run cost of each mechanism can
-# be measured in isolation (VERDICT r15 #1).
-_RERANK_SWAP = os.environ.get("SPARK_GRAFT_ANN_RERANK_SWAP", "1") != "0"
+from sparkswift.operators.spread import prepart, spread
 
 QUANT = 1_000_000
 
@@ -96,43 +90,6 @@ def srp_signature_batched(vec: Column, bits: int = 32, seed: int = 0) -> Column:
 from sparkswift.sources.store import staged_publish as _staged_dir  # noqa: E402
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition the corpus before per-row-HEAVY work (all-pairs
-    native dot scoring, SRP signature batches over every row) —
-    single-row-group parquet otherwise pins everything to one task;
-    input-size-adaptive width (see operators.spread)."""
-    from sparkswift.operators.spread import spread
-
-    return spread(df)
-
-
-def _spread_light(df: DataFrame) -> DataFrame:
-    """The cheap-chain tier (operators.spread.LIGHT_TASK_BYTES) for
-    candidate-bounded re-ranks, quantize/encode passes and k-means
-    feeds: measured r16, forcing these to full width cost 0.5–2.2 s
-    per ANN query at sf0.1 (e16 9.6→7.1 s, d16 5.2→3.9 s cold) with
-    nothing to parallelize; a real corpus scan is already wide, so
-    cluster plans are unchanged."""
-    from sparkswift.operators.spread import spread_light
-
-    return spread_light(df)
-
-
-def _prepart(df: DataFrame, *keys: str) -> DataFrame:
-    """Explicit hash-repartition on the group key before a grouped
-    Arrow UDF: the following ``groupBy(keys)`` reuses the partitioning
-    (no second exchange), and because the count is explicit AQE cannot
-    coalesce the small post-shuffle stage into ONE task and serialize
-    every per-group kernel on a single core (the o9b lesson — measured
-    here as e6's 3.5 s one-task ADC reduce over ~1000 query groups).
-    ``defaultParallelism`` tracks the cluster, so the same code is
-    right at scale."""
-    if os.environ.get("SPARK_GRAFT_PREPART", "1") == "0":
-        return df
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, *[F.col(k) for k in keys])
-
-
 def _exact_rerank_scored(
     corpus: DataFrame,
     queries: DataFrame,
@@ -142,26 +99,19 @@ def _exact_rerank_scored(
 ) -> DataFrame:
     """Exact integer-grid re-rank scoring of a bounded candidate set
     (same arithmetic as cosine_topk → emitted cos_sim is
-    engine-exact). Two shapes, A/B-gated: the default runs on the
-    spread corpus scan with the (queries × k·refine) candidate set
-    broadcast — the quantize + integer-cosine work follows the corpus
-    partitioning at any scale; the ``SPARK_GRAFT_ANN_RERANK_SWAP=0``
-    shape streams candidates into the corpus join (the r14 plan)."""
-    csel = corpus.select(F.col(id_col), F.col(vec_col))
-    if _RERANK_SWAP:
-        csel = _spread_light(csel)
-    cvec = csel.select(
+    engine-exact). Runs on the spread corpus scan with the
+    (queries × k·refine) candidate set broadcast, so the quantize +
+    integer-cosine work follows the corpus partitioning at any
+    scale."""
+    cvec = spread(corpus.select(F.col(id_col), F.col(vec_col)), "light").select(
         F.col(id_col).alias("corpus_id"), quantize(vec_col).alias("cv")
     ).withColumn("cn", norm2_long(F.col("cv")))
     qvec = queries.select(
         F.col(id_col).alias("query_id"), quantize(vec_col).alias("qv")
     ).withColumn("qn", norm2_long(F.col("qv")))
-    joined = (
-        cvec.join(F.broadcast(cands), "corpus_id")
-        if _RERANK_SWAP
-        else cands.join(cvec, "corpus_id")
-    )
-    return joined.join(F.broadcast(qvec), "query_id").select(
+    return cvec.join(F.broadcast(cands), "corpus_id").join(
+        F.broadcast(qvec), "query_id"
+    ).select(
         "query_id",
         "corpus_id",
         cosine(
@@ -211,7 +161,7 @@ def cosine_topk(
     corpus × small query set this is one scan, no corpus shuffle
     before the (tiny) rank exchange.
     """
-    c = _spread(corpus.select(F.col(id_col), F.col(vec_col))).select(
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col))).select(
         F.col(id_col).alias("corpus_id"), quantize(vec_col).alias("cv")
     ).withColumn("cn", norm2_long(F.col("cv")))
     q = queries.select(
@@ -259,7 +209,7 @@ def cosine_range_search(
 
     Returns ``(query_id, corpus_id, cos_sim)``.
     """
-    c = _spread(corpus.select(F.col(id_col), F.col(vec_col))).select(
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col))).select(
         F.col(id_col).alias("corpus_id"), quantize(vec_col).alias("cv")
     ).withColumn("cn", norm2_long(F.col("cv")))
     q = queries.select(
@@ -365,7 +315,7 @@ def cosine_neardup_pairs(
     pair space to same-LSH-bucket candidates first.
     """
     base = (
-        _spread_light(df.select(F.col(id_col), F.col(vec_col)))
+        spread(df.select(F.col(id_col), F.col(vec_col)), "light")
         .select(F.col(id_col).alias("id"), quantize(vec_col).alias("v"))
         .withColumn("n2", norm2_long(F.col("v")))
     )
@@ -419,7 +369,7 @@ def cosine_neardup_blocked(
     if n_blocks is None:
         n_blocks = min(16, df.sparkSession.sparkContext.defaultParallelism)
 
-    base = _spread_light(df.select(F.col(id_col), F.col(vec_col))).select(
+    base = spread(df.select(F.col(id_col), F.col(vec_col)), "light").select(
         F.col(id_col).alias("id"),
         quantize(vec_col).alias("v"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
@@ -522,7 +472,7 @@ def cosine_neardup_lsh(
     exact integer cosine filter. Recall < 1 by design; measured against
     :func:`cosine_neardup_pairs` in tests."""
     base = (
-        _spread_light(df.select(F.col(id_col), F.col(vec_col)))
+        spread(df.select(F.col(id_col), F.col(vec_col)), "light")
         .select(F.col(id_col).alias("id"), quantize(vec_col).alias("v"))
         .withColumn("n2", norm2_long(F.col("v")))
         .withColumn("sig", srp_signature_batched(F.col("v"), bits))
@@ -614,7 +564,7 @@ def cosine_topk_ivf(
             F.col(id_col), F.col(vec_col), corpus_filter.alias("__keep")
         )
     )
-    c = _spread_light(keep).withColumn(
+    c = spread(keep, "light").withColumn(
         "fv", array_to_vector(F.col(vec_col).cast("array<double>"))
     )
     # a coarse quantizer doesn't need convergence — after kmeans|| init
@@ -739,7 +689,7 @@ def ivf_build(
 
     from sparkswift.sources.writers import write_table
 
-    c = _spread_light(corpus.select(F.col(id_col), F.col(vec_col))).withColumn(
+    c = spread(corpus.select(F.col(id_col), F.col(vec_col)), "light").withColumn(
         "fv", array_to_vector(F.col(vec_col).cast("array<double>"))
     )
     model = KMeans(
@@ -797,7 +747,7 @@ def ivf_add(
         return pd.Series(d2.argmin(axis=1).astype(np.int32))
 
     assigned = (
-        _spread_light(new_vectors.select(F.col(id_col), F.col(vec_col)))
+        spread(new_vectors.select(F.col(id_col), F.col(vec_col)), "light")
         .select(
             F.col(id_col).alias("corpus_id"),
             quantize(vec_col).alias("cv"),
@@ -1021,7 +971,7 @@ def cosine_topk_lsh(
 
     def sigs(df: DataFrame, prefix: str, flag: Column | None = None) -> DataFrame:
         extra = [flag.alias("__is_q")] if flag is not None else []
-        return _spread_light(df.select(F.col(id_col), F.col(vec_col), *extra)).select(
+        return spread(df.select(F.col(id_col), F.col(vec_col), *extra), "light").select(
             F.col(id_col).alias(f"{prefix}_id"),
             quantize(vec_col).alias(f"{prefix}v"),
             *(["__is_q"] if flag is not None else []),
@@ -1132,7 +1082,7 @@ def semdedup(
     # cosine geometry), then ONE distributed assignment pass — no
     # full-corpus k-means iterations. At 100 TB the trainer cost is
     # constant; assignment is the only corpus-sized work.
-    c = _spread_light(df.select(F.col(id_col), F.col(vec_col)))
+    c = spread(df.select(F.col(id_col), F.col(vec_col)), "light")
     centers = coarse_train(
         c,
         n_clusters,
@@ -1244,7 +1194,7 @@ def semdedup_store_build(
     st = _semdedup_store(spark, store, num_buckets)
     if st.exists():
         raise ValueError(f"semdedup store '{store}' already exists")
-    c = _spread_light(df.select(F.col(id_col), F.col(vec_col)))
+    c = spread(df.select(F.col(id_col), F.col(vec_col)), "light")
     centers = coarse_train(
         c, n_clusters, id_col=id_col, vec_col=vec_col, seed=seed, iters=max_iter
     )
@@ -1321,7 +1271,7 @@ def semdedup_add(
     centers = np.asarray([r.center for r in rows], dtype=np.float64)
     assigned = (
         assign_lists(
-            _spread_light(new_vectors.select(F.col(id_col), F.col(vec_col))),
+            spread(new_vectors.select(F.col(id_col), F.col(vec_col)), "light"),
             centers,
             vec_col=vec_col,
         )
@@ -1503,7 +1453,7 @@ def pq_encode(
         return pd.Series(list(codes))
 
     cols = [F.col(id_col), F.col(vec_col), *(F.col(c) for c in keep_cols)]
-    return _spread_light(corpus.select(*cols)).select(
+    return spread(corpus.select(*cols), "light").select(
         F.col(id_col).alias("corpus_id"),
         enc(F.col(vec_col)).alias("codes"),
         *(F.col(c) for c in keep_cols),
@@ -1692,7 +1642,7 @@ def cosine_topk_ivfpq(
         sample_x=sx,
     )
     assigned = assign_lists(
-        _spread_light(corpus.select(F.col(id_col), F.col(vec_col))), centers,
+        spread(corpus.select(F.col(id_col), F.col(vec_col)), "light"), centers,
         vec_col=vec_col,
     )
 
@@ -1744,7 +1694,7 @@ def cosine_topk_ivfpq(
         return pd.DataFrame({"query_id": qid, "corpus_id": cid[order]})
 
     cand = (
-        _prepart(codes.join(F.broadcast(probes), "list_id"), "query_id")
+        prepart(codes.join(F.broadcast(probes), "list_id"), ["query_id"])
         .groupBy("query_id")
         .applyInPandas(adc_topk, "query_id long, corpus_id long")
     )
@@ -1806,7 +1756,7 @@ def ivfpq_build(
         sample_x=sx,
     )
     assigned = assign_lists(
-        _spread_light(corpus.select(F.col(id_col), F.col(vec_col))), centers_np,
+        spread(corpus.select(F.col(id_col), F.col(vec_col)), "light"), centers_np,
         vec_col=vec_col,
     )
     codebooks = pq_train(
@@ -1917,7 +1867,7 @@ def ivfpq_search(
         return pd.DataFrame({"query_id": qid, "corpus_id": cid[order]})
 
     cand = (
-        _prepart(codes.join(F.broadcast(probes), "list_id"), "query_id")
+        prepart(codes.join(F.broadcast(probes), "list_id"), ["query_id"])
         .groupBy("query_id")
         .applyInPandas(adc_topk, "query_id long, corpus_id long")
     )
@@ -1974,7 +1924,7 @@ def ivfpq_add(
         d2 = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
         return pd.Series(d2.argmin(axis=1).astype(np.int32))
 
-    assigned = _spread_light(new_vectors.select(F.col(id_col), F.col(vec_col))).select(
+    assigned = spread(new_vectors.select(F.col(id_col), F.col(vec_col)), "light").select(
         F.col(id_col), F.col(vec_col), nearest_center(F.col(vec_col)).alias("list_id")
     )
     codes = pq_encode(
@@ -2061,8 +2011,6 @@ def ivfpq_rebalance(
     triggered the split), and dynamically overwrites two partitions.
     Returns the number of lists split.
     """
-    import os
-
     cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
     m = 1 + max(r.subspace for r in cb_rows)
     ksub = 1 + max(r.code for r in cb_rows)
@@ -2203,7 +2151,7 @@ def mmr_diversify(
         F.round(F.col("cos_sim") * 1_000_000).cast("long").alias("relq"),
     ).localCheckpoint()
     vecs = (
-        _spread(corpus.select(F.col(id_col), F.col(vec_col)))
+        spread(corpus.select(F.col(id_col), F.col(vec_col)))
         .select(F.col(id_col).alias("cand_id"), quantize(vec_col).alias("v"))
         .withColumn("n2", norm2_long(F.col("v")))
     )
@@ -2263,7 +2211,7 @@ def mmr_diversify(
             rows, columns=["query_id", "step", "cand_id", "score10"]
         )
 
-    return _prepart(full, "query_id").groupBy("query_id").applyInPandas(
+    return prepart(full, ["query_id"]).groupBy("query_id").applyInPandas(
         greedy, "query_id long, step long, cand_id long, score10 long"
     )
 

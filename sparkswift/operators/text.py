@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sparkswift.operators.spread import spread
+
 # tiny per-language stopword lists for the heuristic lang-id vote;
 # deliberately small so the same literal lists can be inlined into the
 # DuckDB oracle
@@ -68,26 +70,11 @@ def non_alpha_space_count(col: str | Column) -> Column:
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a narrow input across the cluster before a heavy
-    per-row expression chain: the single-file fixtures scan as ONE
-    partition (one row group → one task), so token explodes and
-    regex-arithmetic chains otherwise run on a single core of a
-    32-core host (measured: t1 1.6 s, t15 1.0 s, p20 3.9 s
-    single-task jobs — guide §2.3). No-op for streaming inputs
-    (micro-batch parallelism comes from the source) and whenever the
-    scan already has >= defaultParallelism partitions — always true
-    at real scale, so cluster plans are unchanged."""
-    from sparkswift.operators.spread import spread
-
-    return spread(df)
-
-
 def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / token / punctuation / stopword quality metrics — the
     standard pre-training filter features (C4/Gopher-style rules),
     computed natively."""
-    df = _spread(df)
+    df = spread(df)
     n_tok = token_count(text_col)
     n_char = char_count(text_col)
     return df.withColumns(
@@ -730,7 +717,7 @@ def unigram_logprob(
 
     Returns ``(id_col, n_tokens, sum_surprisal, avg_nll)``.
     """
-    toks = _spread(df.select(F.col(id_col), F.col(text_col))).select(
+    toks = spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), F.explode(tokens(text_col)).alias("__tok")
     )
     vocab = toks.groupBy("__tok").agg(
@@ -800,8 +787,8 @@ def dsir_logratio(
     # chains: the raw-corpus explode runs TWICE (count model + score
     # pass) and each inherited a single scan partition — measured as
     # 3.9 s + 3.4 s single-task jobs on a 32-core host (guide §2.3)
-    docs = _spread(docs.select(id_col, text_col))
-    target = _spread(target.select(text_col))
+    docs = spread(docs.select(id_col, text_col))
+    target = spread(target.select(text_col))
     feat = word_ngrams_all(text_col, k)
     if hash_buckets is not None:
         fcol = F.explode(feat).alias("__f0")
@@ -1884,8 +1871,8 @@ def bigram_logprob(
     beta = (10 - alpha_tenths) / 10.0
     # both slices feed token/pair explodes (train twice: bigram +
     # unigram counts) — spread the one-file scans before that work
-    train = _spread(train.select(F.col(id_col), F.col(text_col)))
-    score = _spread(score.select(F.col(id_col), F.col(text_col)))
+    train = spread(train.select(F.col(id_col), F.col(text_col)))
+    score = spread(score.select(F.col(id_col), F.col(text_col)))
 
     def pairs_of(df: DataFrame) -> DataFrame:
         toks = tokens(text_col)

@@ -53,6 +53,7 @@ from sparkswift.operators.multimodal import (
     _read_ebml_id,
     _read_ebml_size,
 )
+from sparkswift.operators.spread import width
 
 DEFAULT_BLOCK_BYTES = 65536
 
@@ -492,32 +493,6 @@ def list_files(
     )
 
 
-def _listing_width(listing: DataFrame) -> int:
-    """Input-size-adaptive task width for a ranged-census pass over a
-    file LISTING (guide §2/§6): Spark's binaryFile source packs the
-    listing by openCost into ~dozens of splits even for a few hundred
-    tiny fixture files, and every split pays the ~10-12 ms serialized
-    task floor while the census reads only headers (~0.2% of bytes).
-    Width follows the listing's size estimate (proportional to total
-    file bytes) so a real corpus pins the defaultParallelism cap and
-    cluster plans are unchanged; ``SPARK_GRAFT_LISTING_TASK_BYTES``
-    tunes the per-task budget (default 16 MB of estimate ≈ 64 MB of
-    file bytes — the estimate prunes the unread content column)."""
-    import os
-
-    n = listing.sparkSession.sparkContext.defaultParallelism
-    budget = int(
-        os.environ.get("SPARK_GRAFT_LISTING_TASK_BYTES", str(16 << 20))
-    )
-    try:
-        sz = int(
-            listing._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return n
-    return max(1, min(n, -(-sz // budget)))
-
-
 def _header_loader(
     listing: DataFrame,
     census: Callable[[RangedReader], dict],
@@ -525,10 +500,12 @@ def _header_loader(
     block_bytes: int,
 ) -> DataFrame:
     """Shared mapInPandas shell: per listing row, open ranged, run
-    the census, emit census fields + header_bytes_read. The listing
-    is coalesced to the adaptive width (:func:`_listing_width`) — a
-    narrow merge of the scan's splits, no shuffle."""
-    listing = listing.coalesce(_listing_width(listing))
+    the census, emit census fields + header_bytes_read. binaryFile
+    packs even a few hundred tiny files into dozens of splits, each
+    paying the per-task floor for a header read, so the listing is
+    coalesced to the spread "listing" width — a narrow merge of the
+    scan's splits, no shuffle."""
+    listing = listing.coalesce(width(listing, "listing"))
     schema = "path string, file_bytes bigint, " + ", ".join(
         f"{n} {t}" for n, t in fields
     ) + ", header_bytes_read bigint"

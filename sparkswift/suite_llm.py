@@ -1128,14 +1128,14 @@ def p8_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p9_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from sparkswift.operators.spread import spread as _sp
+    from sparkswift.operators.spread import spread
 
     # spread before the per-row-heavy text chain (tokenize + line
     # chunk + C4 rules + shingles): the single-file fixture scans as
     # ONE partition and the whole pipeline ran as 1-task jobs
     # (guide §2.3; qjobs r16: 4.9 s + 4.4 s single-task). No-op on
     # real (wide) corpora.
-    docs = _sp(load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents"))
 
     # 1. line-ify (same deterministic chunking as t8) + C4 filter
     words = tx.tokens("text")
@@ -5246,9 +5246,9 @@ def _media_files(
 
     from sparkswift.sources import media_headers as mh
 
-    from sparkswift.operators.spread import spread_light as _sp
+    from sparkswift.operators.spread import spread
 
-    docs = _sp(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"), "light")
     d = mkscratch(f"hdr_{ext}_")
     mh.write_payload_files(synth(docs, "doc_id"), d, ext=ext)
     return d
@@ -5468,9 +5468,9 @@ def mm32_media_triage_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sparkswift.sources import media_headers as mh
 
-    from sparkswift.operators.spread import spread_light as _sp
+    from sparkswift.operators.spread import spread
 
-    docs = _sp(load_table(spark, sf_dir, "documents").select("doc_id"))
+    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id"), "light")
     d = mkscratch("hdr_mixed_")
     # all four formats in ONE distributed write job (per-row ext):
     # 4 jobs + 4 driver collects -> 1 + 1, identical files on disk

@@ -2509,13 +2509,13 @@ def st38_stream_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     def ingest(batch_df, epoch_id):
         d = tempfile.mkdtemp(prefix=f"triage38_b{epoch_id}_", dir=base)
         # spread ONCE before the four-way fan-out (the mm32 shape):
-        # each branch's own _spread then no-ops and all four branches
+        # each branch's own spread then no-ops and all four branches
         # share ONE reused exchange instead of re-scanning and
         # re-exchanging the batch file per format (guide §2.4); width
         # is input-size-adaptive (operators.spread)
-        from sparkswift.operators.spread import spread_light as _sp
+        from sparkswift.operators.spread import spread
 
-        spread = _sp(batch_df)
+        spread_df = spread(batch_df, "light")
         # one distributed write job for all four formats (per-row
         # ext): 4 jobs + 4 collects per micro-batch -> 1 + 1
         mixed = None
@@ -2525,7 +2525,7 @@ def st38_stream_media_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
             (mm.synth_mp4_stub_payload, 2, "mp4"),
             (mm.synth_webp_payload, 3, "webp"),
         ):
-            part = synth(spread.filter(F.col("doc_id") % 4 == r)).select(
+            part = synth(spread_df.filter(F.col("doc_id") % 4 == r)).select(
                 "doc_id", "payload", F.lit(ext).alias("__ext")
             )
             mixed = part if mixed is None else mixed.unionByName(part)

@@ -351,7 +351,7 @@ def test_p19_pairs_single_exchange_for_both_windows(plans):
 
 def test_mm_real_decodes_are_map_side_only(plans):
     # decode runs as one Arrow mapInPandas pass; payload bytes never
-    # shuffle. The ONLY exchange allowed is _spread's round-robin of
+    # shuffle. The ONLY exchange allowed is spread's round-robin of
     # the 8-byte id column BELOW payload synthesis (the one-file scan
     # otherwise pins the whole decode chain to a single task) — never
     # a hash/range exchange, and never one above the synth where rows

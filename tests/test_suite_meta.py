@@ -45,3 +45,25 @@ def test_window_is_exactly_fifty_registered_names():
     assert len(names) >= 50
     assert len(set(names[:50])) == 50
     assert set(suite._WINDOW) == set(names[:50])
+
+
+def test_every_env_knob_is_documented():
+    """Every ``SPARK_GRAFT_*`` name under ``sparkswift/`` appears in
+    the configuration table of docs/API.md, and the table lists no
+    name the library no longer reads."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    knob = re.compile(r"SPARK_GRAFT_[A-Z_]*[A-Z]")
+    used = {
+        m
+        for path in (root / "sparkswift").rglob("*.py")
+        for m in knob.findall(path.read_text())
+    }
+    api = (root / "docs" / "API.md").read_text()
+    table = api.split("## Configuration (environment)", 1)[1].split("\n## ", 1)[0]
+    documented = {
+        m for line in table.splitlines() if line.startswith("| `") for m in knob.findall(line)
+    }
+    assert used == documented, (sorted(used - documented), sorted(documented - used))

@@ -1343,26 +1343,27 @@ def test_ewm_mean_global_bit_identity(spark, sf_dir):
         )
 
 
-def test_chain_rounds_adaptive(spark, sf_dir, monkeypatch):
+def test_chain_rounds_adaptive(spark, sf_dir):
     """n_buckets=None derives the round count from the
     optimizer-estimated input size (sequential rounds are pure
     overhead until per-key slice volume outgrows task memory):
     floored at 2 so the continued-carry path is always exercised,
-    one round per SPARK_GRAFT_CHAIN_ROUND_BYTES, capped at 64 — and
-    the adaptive result is bit-identical to any explicit count (the
-    bucketing-invariance law)."""
-    from sparkswift.operators.rolling import _chain_rounds, ewm_mean_global
+    one round per 256 MB of estimate, capped at 64 — and the adaptive
+    result is bit-identical to any explicit count (the
+    bucketing-invariance law). ``spark.range(n)`` estimates exactly
+    8·n bytes, so it pins the clamp at explicit sizes without
+    running anything."""
+    from sparkswift.operators.rolling import ewm_mean_global
+    from sparkswift.operators.spread import width
     from sparkswift.sources import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    # tiny fixture -> the floor
-    assert _chain_rounds(ev) == 2
-    # one round per budget byte-chunk, env-parameterised for clusters
-    monkeypatch.setenv("SPARK_GRAFT_CHAIN_ROUND_BYTES", "1024")
-    assert _chain_rounds(ev) > 2  # grows with input/budget ratio
-    monkeypatch.setenv("SPARK_GRAFT_CHAIN_ROUND_BYTES", "1")
-    assert _chain_rounds(ev) == 64  # capped
-    monkeypatch.delenv("SPARK_GRAFT_CHAIN_ROUND_BYTES")
+    per_round = (256 << 20) // 8  # range rows per round budget
+    assert width(ev, "rounds") == 2  # tiny fixture -> the floor
+    assert width(spark.range(per_round), "rounds") == 2
+    assert width(spark.range(5 * per_round), "rounds") == 5
+    assert width(spark.range(5 * per_round + 1), "rounds") == 6
+    assert width(spark.range(1000 * per_round), "rounds") == 64  # capped
 
     base = {
         r.event_id: r.ewm
