@@ -131,7 +131,6 @@ def apply_series(
     output_col: str | None = None,
     returns: T.DataType | str | None = None,
     force_udf: bool = False,
-    validate: bool = True,
     fallback: bool = False,
     convert_dtype: bool = True,
     args: tuple = (),
@@ -148,14 +147,13 @@ def apply_series(
 
     ``force_udf`` mirrors ``force_parallel``
     (swifter/swifter.py:131-138): skip the native-expression attempt.
-    ``validate`` (default True — the reference ALWAYS gates its
-    vectorized fast path on a sample check, swifter.py:313-316) checks
-    the native expression against the pandas result on the call's one
-    sample before trusting it: Python and SQL disagree on e.g. ``%`` of
+    A native expression is always checked against the pandas result
+    on the call's one sample before it is trusted, as the reference
+    always gates its vectorized fast path on a sample check
+    (swifter.py:313-316): Python and SQL disagree on e.g. ``%`` of
     negatives (-7%3 is 2 in Python, -1 in SQL), and the gate routes
     such funcs to the Arrow path where pandas semantics hold.
-    ``validate=False`` skips it (and the sample) for funcs known to be
-    expression-safe. ``fallback`` enables the R6 chain (SURVEY §4):
+    ``fallback`` enables the R6 chain (SURVEY §4):
     convert the sampled outputs to Arrow with the UDF's return type
     driver-side and drop to a pickled row-wise udf when the payload is
     Arrow-incompatible (nested mixed dicts, sets, …).
@@ -168,8 +166,6 @@ def apply_series(
     native = None
     if not force_udf and convert_dtype:
         native = _try_native_cell(func, df, col)
-        if native is not None and not validate:
-            return df.withColumn(out_name, native)
 
     rtype = returns
     if not convert_dtype and returns is None:

@@ -410,41 +410,6 @@ def containment_pairs(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signature(shingle_arr: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-slot MinHash signature: slot i = min over shingles of
-    xxhash64(shingle, salt=i). Deterministic (no RNG), computed per row
-    with zero shuffle."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(shingle_arr, lambda s: F.xxhash64(s, F.lit(i)))
-            ).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    )
-
-
-def minhash_signature_batched(
-    shingles: Column, num_hashes: int = 64, seed: int = 0
-) -> Column:
-    """MinHash signature as one vectorized kernel per Arrow batch.
-
-    Division of labor chosen for the 100 TB path: the per-shingle base
-    hash runs JVM-side (``xxhash64`` inside whole-stage codegen), so
-    Arrow ships compact int64 arrays — not shingle STRINGS — to
-    Python; the Python side is a single flattened
-    (total_shingles × num_hashes) uint64 multiply-add with a
-    segment-min (``minimum.reduceat``), no per-row Python work at all.
-
-    Replaces the expression variant in the hot path for the same
-    reason as similarity.srp_signature_batched: 64 array_min/transform
-    expressions per row is a codegen-compile hazard. Fixed-seed
-    multipliers -> identical signatures on every executor and run."""
-    return _minhash_from_hashes(
-        F.transform(shingles, lambda x: F.xxhash64(x)), num_hashes, seed
-    )
-
-
 def _minhash_from_hashes(hashes: Column, num_hashes: int, seed: int) -> Column:
     rng = np.random.Generator(np.random.PCG64(seed))
     a = rng.integers(1, np.iinfo(np.int64).max, size=num_hashes).astype(np.uint64) | np.uint64(1)

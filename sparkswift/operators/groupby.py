@@ -40,6 +40,23 @@ def _sample_groups_pandas(df: DataFrame, keys: list[str], n_groups: int = 20) ->
     return sampled.toPandas()
 
 
+def keyed_frame(out, keyvals: dict) -> pd.DataFrame:
+    """One group's UDF result as a frame, pandas ``groupby().apply``
+    shape: a DataFrame as is, a Series as one row, anything else as a
+    one-row ``result`` column; then each key the result lacks goes in
+    front, in key order."""
+    if isinstance(out, pd.DataFrame):
+        res = out.reset_index(drop=True)
+    elif isinstance(out, pd.Series):
+        res = out.to_frame().T.reset_index(drop=True)
+    else:
+        res = pd.DataFrame({"result": [out]})
+    for k, v in reversed(keyvals.items()):
+        if k not in res.columns:
+            res.insert(0, k, v)
+    return res
+
+
 def validate_level(df: DataFrame, level) -> list[str]:
     """``level=`` validation shared by groupby_apply and the accessor
     (ADVICE r4): pandas-style positional int levels have no meaning on
@@ -125,17 +142,7 @@ def groupby_apply(
     def _run_one(pdf: pd.DataFrame) -> pd.DataFrame:
         keyvals = {k: pdf[k].iloc[0] for k in keys}
         body = pdf.drop(columns=keys) if len(pdf.columns) > len(keys) else pdf
-        out = func(body)
-        if isinstance(out, pd.DataFrame):
-            res = out.reset_index(drop=True)
-        elif isinstance(out, pd.Series):
-            res = out.to_frame().T.reset_index(drop=True)
-        else:
-            res = pd.DataFrame({"result": [out]})
-        for k in reversed(keys):
-            if k not in res.columns:
-                res.insert(0, k, keyvals[k])
-        return res
+        return keyed_frame(func(body), keyvals)
 
     if schema is None:
         from sparkswift.plans.inference import suppress_sample_output
@@ -244,17 +251,7 @@ def cogroup_apply(
         lbody = lpdf.drop(columns=[k for k in keys if k in lpdf.columns])
         rbody = rpdf.drop(columns=[k for k in keys if k in rpdf.columns])
         rbody = rbody.rename(columns=uncg)
-        out = func(lbody, rbody)
-        if isinstance(out, pd.DataFrame):
-            res = out.reset_index(drop=True)
-        elif isinstance(out, pd.Series):
-            res = out.to_frame().T.reset_index(drop=True)
-        else:
-            res = pd.DataFrame({"result": [out]})
-        for k, v in zip(reversed(keys), reversed(key_tuple)):
-            if k not in res.columns:
-                res.insert(0, k, v)
-        return res
+        return keyed_frame(func(lbody, rbody), dict(zip(keys, key_tuple)))
 
     if schema is None:
         from sparkswift.plans.inference import suppress_sample_output

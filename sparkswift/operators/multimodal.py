@@ -37,6 +37,20 @@ video stays NotImplementedError — that is ffmpeg territory.
 ``synth_avi_payload`` emit VALID media
 bytes from an id column so the real decoders are exercised end-to-end
 without external media.
+
+Plumbing: every op that turns one payload into one row states only
+its per-row work and its output fields. ``_map_rows`` is the one
+``mapInPandas`` shell (its inner function is ``batches``): it runs a
+per-row function over the selected columns and types each pandas
+batch from the ``(name, DDL type)`` field list, which also gives the
+schema. The census ops reach it through ``_census`` (``id`` plus the
+payload's facts), and the ranged loaders of sources/media_headers.py
+through ``_header_loader``. AVI, MP4 and Matroska each keep one field
+list and one facts function (``_AVI_FIELDS``/``_avi_facts`` …), read
+by both the in-memory op and the ranged loader, so the two paths
+cannot drift. Fixture builders ``synth_*`` state only ``one(id) ->
+bytes`` and hand it to ``_synth_payload``, which wraps it in the
+Arrow UDF ``make`` on the frame spread to the given width tier.
 """
 
 from __future__ import annotations
@@ -46,7 +60,7 @@ import io
 import struct
 import wave
 import zlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -84,6 +98,70 @@ def attach_payload(
             F.lit(None).cast("int").alias("n_frames"),
         ),
     )
+
+
+# --- the one-row-per-payload shell ------------------------------------------
+
+_PANDAS_DTYPE = {"bigint": "int64", "int": "int32", "string": "object"}
+
+Fields = list[tuple[str, str]]
+
+
+def _map_rows(
+    df: DataFrame, cols: list[str], fields: Fields, row: Callable[..., tuple]
+) -> DataFrame:
+    """One output row per input row through ``mapInPandas``:
+    ``row(*values of cols)`` returns the row's values in ``fields``
+    order, and each Arrow batch becomes one pandas frame typed from
+    the fields' DDL types (typed even when a partition is empty)."""
+    schema = ", ".join(f"{n} {t}" for n, t in fields)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            vals = [row(*r) for r in zip(*(pdf[c] for c in cols))]
+            out = list(zip(*vals)) if vals else [()] * len(fields)
+            yield pd.DataFrame(
+                {
+                    n: pd.Series(v, dtype=_PANDAS_DTYPE[t])
+                    for (n, t), v in zip(fields, out)
+                }
+            )
+
+    return df.select(*cols).mapInPandas(batches, schema)
+
+
+def _census(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    fields: Fields,
+    facts: Callable[[bytes], tuple],
+) -> DataFrame:
+    """Per-payload census: ``id`` then ``facts(payload bytes)``."""
+    return _map_rows(
+        df,
+        [id_col, payload_col],
+        [("id", "bigint"), *fields],
+        lambda i, p: (int(i), *facts(bytes(p))),
+    )
+
+
+def _pick(facts: dict, fields: Fields) -> tuple:
+    """The values of a parser's fact dict in ``fields`` order."""
+    return tuple(facts[n] for n, _ in fields)
+
+
+def _synth_payload(
+    df: DataFrame, id_col: str, one: Callable[[int], bytes], tier: str = "heavy"
+) -> DataFrame:
+    """Fixture ``payload`` column: ``one(id)`` per row in one Arrow
+    UDF, on the frame spread to the ``tier`` width."""
+
+    @F.pandas_udf("binary")
+    def make(ids: pd.Series) -> pd.Series:
+        return ids.map(lambda i: one(int(i)))
+
+    return spread(df, tier).withColumn("payload", make(F.col(id_col)))
 
 
 # --- real zero-dependency codecs -------------------------------------------
@@ -2240,22 +2318,17 @@ def synth_wav_deep_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (scaled by 2¹⁵ into the int24 range) / float32 / float64 — all
     three decode to the IDENTICAL float64 series."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 64 + 4 * (i % 16)
-            base = (3 * i + 5 * np.arange(n, dtype=np.int64)) % 512 - 256
-            if i % 3 == 0:
-                return encode_wav_deep(base * 32768, "pcm24", 8000)
-            v = base / 256.0
-            return encode_wav_deep(
-                v, "f32" if i % 3 == 1 else "f64", 8000
-            )
+    def one(i: int) -> bytes:
+        n = 64 + 4 * (i % 16)
+        base = (3 * i + 5 * np.arange(n, dtype=np.int64)) % 512 - 256
+        if i % 3 == 0:
+            return encode_wav_deep(base * 32768, "pcm24", 8000)
+        v = base / 256.0
+        return encode_wav_deep(
+            v, "f32" if i % 3 == 1 else "f64", 8000
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 def synth_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2264,20 +2337,15 @@ def synth_ppm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     at width 4+id%5 × height 3+id%4 — so the real decoder's output is
     pure id arithmetic (the driver oracle re-derives it in SQL)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 4 + i % 5, 3 + i % 4
-            px = np.empty((h, w, 3), np.uint8)
-            px[..., 0], px[..., 1], px[..., 2] = (
-                i % 256, (i * 7) % 256, (i * 13) % 256,
-            )
-            return b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
+    def one(i: int) -> bytes:
+        w, h = 4 + i % 5, 3 + i % 4
+        px = np.empty((h, w, 3), np.uint8)
+        px[..., 0], px[..., 1], px[..., 2] = (
+            i % 256, (i * 7) % 256, (i * 13) % 256,
+        )
+        return b"P6\n%d %d\n255\n" % (w, h) + px.tobytes()
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2297,22 +2365,17 @@ def synth_wav_payload(
     samples of constant amplitude 16·(id%1000) — duration and band
     means become exact id arithmetic for the driver oracle."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n, amp = 64 + i % 64, (i % 1000) * 16
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(sample_rate)
-                w.writeframes(struct.pack(f"<{n}h", *([amp] * n)))
-            return buf.getvalue()
+    def one(i: int) -> bytes:
+        n, amp = 64 + i % 64, (i % 1000) * 16
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(sample_rate)
+            w.writeframes(struct.pack(f"<{n}h", *([amp] * n)))
+        return buf.getvalue()
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -2541,22 +2604,17 @@ def synth_png_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     means reduce to EXACT dyadic id arithmetic the SQL oracle
     re-derives: mean_c = base_c + (w−1)/2 + (h−1)/2."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 4 + i % 5, 3 + i % 4
-            x = np.arange(w, dtype=np.int32)[None, :, None]
-            y = np.arange(h, dtype=np.int32)[:, None, None]
-            base = np.array(
-                [i % 200, (i * 7) % 200, (i * 13) % 200], np.int32
-            )[None, None, :]
-            px = (base + x + y).astype(np.uint8)
-            return encode_png(px, filter_of=lambda yy: (i + yy) % 5)
+    def one(i: int) -> bytes:
+        w, h = 4 + i % 5, 3 + i % 4
+        x = np.arange(w, dtype=np.int32)[None, :, None]
+        y = np.arange(h, dtype=np.int32)[:, None, None]
+        base = np.array(
+            [i % 200, (i * 7) % 200, (i * 13) % 200], np.int32
+        )[None, None, :]
+        px = (base + x + y).astype(np.uint8)
+        return encode_png(px, filter_of=lambda yy: (i + yy) % 5)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2583,22 +2641,17 @@ def synth_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     DC-differential path on every image; restart markers every 2 MCUs
     on odd ids exercise the RSTn path across the corpus."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            nbx, nby = 1 + i % 3, 1 + i % 2
-            bx = np.arange(nbx, dtype=np.int64)[None, :]
-            by = np.arange(nby, dtype=np.int64)[:, None]
-            g = 28 + 2 * ((3 * i + 5 * bx + 7 * by) % 100)
-            px = np.kron(g, np.ones((8, 8), dtype=np.int64)).astype(np.float64)
-            return encode_jpeg_gray(
-                px, restart_interval=2 if i % 2 else 0
-            )
+    def one(i: int) -> bytes:
+        nbx, nby = 1 + i % 3, 1 + i % 2
+        bx = np.arange(nbx, dtype=np.int64)[None, :]
+        by = np.arange(nby, dtype=np.int64)[:, None]
+        g = 28 + 2 * ((3 * i + 5 * bx + 7 * by) % 100)
+        px = np.kron(g, np.ones((8, 8), dtype=np.int64)).astype(np.float64)
+        return encode_jpeg_gray(
+            px, restart_interval=2 if i % 2 else 0
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2648,29 +2701,24 @@ def synth_jpeg420_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     channel means reduce to block-mean id arithmetic + the palette's
     certified rounding shifts — the mm9 oracle re-derives both."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            nbx, nby = 1 + i % 5, 1 + i % 3
-            bx = np.arange(nbx, dtype=np.int64)[None, :]
-            by = np.arange(nby, dtype=np.int64)[:, None]
-            yb = 60 + 2 * ((3 * i + 5 * bx + 7 * by) % 60)
-            y = np.kron(yb, np.ones((8, 8), dtype=np.int64)).astype(
-                np.float64
-            )
-            cb, cr = JPEG420_PALETTE[i % 8][:2]
-            return encode_jpeg_ycbcr(
-                y,
-                np.full_like(y, float(cb)),
-                np.full_like(y, float(cr)),
-                sampling=JPEG420_SAMPLINGS[i % 3],
-                restart_interval=2 if i % 4 == 0 else 0,
-            )
+    def one(i: int) -> bytes:
+        nbx, nby = 1 + i % 5, 1 + i % 3
+        bx = np.arange(nbx, dtype=np.int64)[None, :]
+        by = np.arange(nby, dtype=np.int64)[:, None]
+        yb = 60 + 2 * ((3 * i + 5 * bx + 7 * by) % 60)
+        y = np.kron(yb, np.ones((8, 8), dtype=np.int64)).astype(
+            np.float64
+        )
+        cb, cr = JPEG420_PALETTE[i % 8][:2]
+        return encode_jpeg_ycbcr(
+            y,
+            np.full_like(y, float(cb)),
+            np.full_like(y, float(cr)),
+            sampling=JPEG420_SAMPLINGS[i % 3],
+            restart_interval=2 if i % 4 == 0 else 0,
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2696,31 +2744,26 @@ def synth_png_palette_payload(
     5..12 keep partial trailing bytes in play. Channel means reduce
     to the same integer arithmetic the mm11 oracle re-derives."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            depth = (8, 4, 2)[i % 3]
-            pp = 4 if i % 3 == 2 else 16
-            w, h = 5 + i % 8, 4 + i % 5
-            k = np.arange(pp, dtype=np.int64)
-            pal = np.stack(
-                [
-                    (3 * i + 17 * k) % 256,
-                    (7 * i + 29 * k) % 256,
-                    (13 * i + 11 * k) % 256,
-                ],
-                axis=1,
-            ).astype(np.uint8)
-            xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-            idx = (xx + 2 * yy + i) % pp
-            return encode_png_palette(
-                idx, pal, depth=depth, filter_of=lambda y: (i + y) % 5
-            )
+    def one(i: int) -> bytes:
+        depth = (8, 4, 2)[i % 3]
+        pp = 4 if i % 3 == 2 else 16
+        w, h = 5 + i % 8, 4 + i % 5
+        k = np.arange(pp, dtype=np.int64)
+        pal = np.stack(
+            [
+                (3 * i + 17 * k) % 256,
+                (7 * i + 29 * k) % 256,
+                (13 * i + 11 * k) % 256,
+            ],
+            axis=1,
+        ).astype(np.uint8)
+        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
+        idx = (xx + 2 * yy + i) % pp
+        return encode_png_palette(
+            idx, pal, depth=depth, filter_of=lambda y: (i + y) % 5
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2752,50 +2795,45 @@ def synth_png_mixed_payload(
     through all five on a GLOBAL line counter (so interlaced images
     change filters across pass boundaries)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            mode = i % 4
-            fo = lambda y: (i + y) % 5  # noqa: E731
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
-            )
-            if mode == 2:
-                k = np.arange(16, dtype=np.int64)
-                pal = np.stack(
-                    [
-                        (3 * i + 17 * k) % 256,
-                        (7 * i + 29 * k) % 256,
-                        (13 * i + 11 * k) % 256,
-                    ],
-                    axis=1,
-                ).astype(np.uint8)
-                trns = ((23 * i + 31 * k) % 256).astype(np.uint8)
-                idx = ((xx + 2 * yy + i) % 16).astype(np.uint8)
-                return encode_png_palette(idx, pal, 4, fo, trns=trns)
-            c = np.arange(3, dtype=np.int64)[None, None, :]
-            if mode == 0:
-                px = (
-                    (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
-                    % 256
-                ).astype(np.uint8)
-                return encode_png(px, fo, interlace=1)
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        mode = i % 4
+        fo = lambda y: (i + y) % 5  # noqa: E731
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        if mode == 2:
+            k = np.arange(16, dtype=np.int64)
+            pal = np.stack(
+                [
+                    (3 * i + 17 * k) % 256,
+                    (7 * i + 29 * k) % 256,
+                    (13 * i + 11 * k) % 256,
+                ],
+                axis=1,
+            ).astype(np.uint8)
+            trns = ((23 * i + 31 * k) % 256).astype(np.uint8)
+            idx = ((xx + 2 * yy + i) % 16).astype(np.uint8)
+            return encode_png_palette(idx, pal, 4, fo, trns=trns)
+        c = np.arange(3, dtype=np.int64)[None, None, :]
+        if mode == 0:
             px = (
-                (
-                    251 * i
-                    + 257 * xx[:, :, None]
-                    + 263 * yy[:, :, None]
-                    + 1009 * c
-                )
-                % 65536
-            ).astype(np.uint16)
-            return encode_png(px, fo, interlace=0 if mode == 1 else 1)
+                (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
+                % 256
+            ).astype(np.uint8)
+            return encode_png(px, fo, interlace=1)
+        px = (
+            (
+                251 * i
+                + 257 * xx[:, :, None]
+                + 263 * yy[:, :, None]
+                + 1009 * c
+            )
+            % 65536
+        ).astype(np.uint16)
+        return encode_png(px, fo, interlace=0 if mode == 1 else 1)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -2822,28 +2860,23 @@ def synth_jpeg_prog_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     DC, EOB runs, and successive-approximation reassembly all run
     corpus-wide with a hash-certifiable mean."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            nbx, nby = 1 + i % 4, 1 + i % 2
-            bx = np.arange(nbx, dtype=np.int64)[None, :]
-            by = np.arange(nby, dtype=np.int64)[:, None]
-            yb = 64 + 2 * ((5 * i + 3 * bx + 11 * by) % 56)
-            y = np.kron(yb, np.ones((8, 8), dtype=np.int64)).astype(
-                np.float64
-            )
-            cb, cr = JPEG420_PALETTE[i % 8][:2]
-            return encode_jpeg_progressive(
-                y,
-                np.full_like(y, float(cb)),
-                np.full_like(y, float(cr)),
-                sampling=JPEG420_SAMPLINGS[i % 3],
-            )
+    def one(i: int) -> bytes:
+        nbx, nby = 1 + i % 4, 1 + i % 2
+        bx = np.arange(nbx, dtype=np.int64)[None, :]
+        by = np.arange(nby, dtype=np.int64)[:, None]
+        yb = 64 + 2 * ((5 * i + 3 * bx + 11 * by) % 56)
+        y = np.kron(yb, np.ones((8, 8), dtype=np.int64)).astype(
+            np.float64
+        )
+        cb, cr = JPEG420_PALETTE[i % 8][:2]
+        return encode_jpeg_progressive(
+            y,
+            np.full_like(y, float(cb)),
+            np.full_like(y, float(cr)),
+            sampling=JPEG420_SAMPLINGS[i % 3],
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -3383,23 +3416,18 @@ def synth_avi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     DIB 4-byte row padding load-bearing corpus-wide (w=8 covers the
     unpadded row)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h, n = 5 + i % 4, 4 + i % 3, 2 + i % 4
-            frames = []
-            for f in range(n):
-                px = np.empty((h, w, 3), np.uint8)
-                px[..., 0] = (i + 11 * f) % 200
-                px[..., 1] = (7 * i + 3 * f) % 200
-                px[..., 2] = (13 * i + 5 * f) % 200
-                frames.append(px)
-            return encode_avi(frames)
+    def one(i: int) -> bytes:
+        w, h, n = 5 + i % 4, 4 + i % 3, 2 + i % 4
+        frames = []
+        for f in range(n):
+            px = np.empty((h, w, 3), np.uint8)
+            px[..., 0] = (i + 11 * f) % 200
+            px[..., 1] = (7 * i + 3 * f) % 200
+            px[..., 2] = (13 * i + 5 * f) % 200
+            frames.append(px)
+        return encode_avi(frames)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -3479,25 +3507,20 @@ def synth_mjpeg_avi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     mean is exact id arithmetic the SQL oracle re-derives (gray
     replicates to RGB: mean_r = mean_g = mean_b)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            nbx, nby, nf = 1 + i % 3, 1 + i % 2, 2 + i % 3
-            jpegs = []
-            for f in range(nf):
-                px = np.empty((8 * nby, 8 * nbx), np.uint8)
-                for by in range(nby):
-                    for bx in range(nbx):
-                        px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                            28 + 2 * ((3 * i + 5 * bx + 7 * by + 9 * f) % 100)
-                        )
-                jpegs.append(encode_jpeg_gray(px))
-            return encode_avi_mjpeg(jpegs, 8 * nbx, 8 * nby)
+    def one(i: int) -> bytes:
+        nbx, nby, nf = 1 + i % 3, 1 + i % 2, 2 + i % 3
+        jpegs = []
+        for f in range(nf):
+            px = np.empty((8 * nby, 8 * nbx), np.uint8)
+            for by in range(nby):
+                for bx in range(nbx):
+                    px[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
+                        28 + 2 * ((3 * i + 5 * bx + 7 * by + 9 * f) % 100)
+                    )
+            jpegs.append(encode_jpeg_gray(px))
+        return encode_avi_mjpeg(jpegs, 8 * nbx, 8 * nby)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -3574,29 +3597,24 @@ def synth_netpbm_payload(
     Widths 5..12 keep PBM's row byte-padding load-bearing; a comment
     line in every header keeps the grammar walk honest."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        if i % 2 == 0:
+            g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
+            return (
+                b"P5\n# synth\n%d %d\n255\n" % (w, h) + g.tobytes()
             )
-            if i % 2 == 0:
-                g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
-                return (
-                    b"P5\n# synth\n%d %d\n255\n" % (w, h) + g.tobytes()
-                )
-            bits = ((xx + yy + i) % 2).astype(np.uint8)
-            stride = -(-w // 8)
-            padded = np.zeros((h, stride * 8), np.uint8)
-            padded[:, :w] = bits
-            packed = np.packbits(padded, axis=1)
-            return b"P4\n# synth\n%d %d\n" % (w, h) + packed.tobytes()
+        bits = ((xx + yy + i) % 2).astype(np.uint8)
+        stride = -(-w // 8)
+        padded = np.zeros((h, stride * 8), np.uint8)
+        padded[:, :w] = bits
+        packed = np.packbits(padded, axis=1)
+        return b"P4\n# synth\n%d %d\n" % (w, h) + packed.tobytes()
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -3621,34 +3639,29 @@ def synth_gif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     these sizes cross the 32- and 64-slot width boundaries), so the
     per-frame channel means certify the whole decode chain."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            k = np.arange(16, dtype=np.int64)
-            pal = np.stack(
-                [
-                    (3 * i + 17 * k) % 256,
-                    (7 * i + 29 * k) % 256,
-                    (13 * i + 11 * k) % 256,
-                ],
-                axis=1,
-            ).astype(np.uint8)
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
-            )
-            frames = [
-                ((xx + 2 * yy + i + 5 * f) % 16).astype(np.uint8)
-                for f in range(1 + i % 3)
-            ]
-            return encode_gif(
-                frames, pal, interlace_of=lambda f: (i + f) % 2 == 1
-            )
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        k = np.arange(16, dtype=np.int64)
+        pal = np.stack(
+            [
+                (3 * i + 17 * k) % 256,
+                (7 * i + 29 * k) % 256,
+                (13 * i + 11 * k) % 256,
+            ],
+            axis=1,
+        ).astype(np.uint8)
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        frames = [
+            ((xx + 2 * yy + i + 5 * f) % 16).astype(np.uint8)
+            for f in range(1 + i % 3)
+        ]
+        return encode_gif(
+            frames, pal, interlace_of=lambda f: (i + f) % 2 == 1
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -3677,49 +3690,44 @@ def synth_png_gray_payload(
        the oracle re-derives).
     Widths 5..12 × heights 4..8; filters rotate all five globally."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            mode = i % 5
-            fo = lambda y: (i + y) % 5  # noqa: E731
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        mode = i % 5
+        fo = lambda y: (i + y) % 5  # noqa: E731
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        if mode == 0:
+            g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
+            return encode_png(g[:, :, None], fo)
+        if mode == 1:
+            g = ((251 * i + 257 * xx + 263 * yy) % 65536).astype(
+                np.uint16
             )
-            if mode == 0:
-                g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
-                return encode_png(g[:, :, None], fo)
-            if mode == 1:
-                g = ((251 * i + 257 * xx + 263 * yy) % 65536).astype(
-                    np.uint16
-                )
-                return encode_png(g[:, :, None], fo, interlace=1)
-            if mode == 2:
-                raw = ((xx + 2 * yy + i) % 16).astype(np.uint8)
-                return encode_png(raw[:, :, None], fo, gray_depth=4)
-            if mode == 3:
-                g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
-                a = ((23 * i + 31 * (xx + yy)) % 256).astype(np.uint8)
-                return encode_png(np.stack([g, a], axis=2), fo)
-            c = np.arange(3, dtype=np.int64)[None, None, :]
-            px = (
-                (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
-                % 256
-            ).astype(np.uint8)
-            data = encode_png(px, fo)
-            key = struct.pack(
-                ">HHH",
-                (3 * i) % 256,
-                (3 * i + 7) % 256,
-                (3 * i + 14) % 256,
-            )
-            j = data.find(b"IDAT") - 4
-            return data[:j] + _png_chunk(b"tRNS", key) + data[j:]
+            return encode_png(g[:, :, None], fo, interlace=1)
+        if mode == 2:
+            raw = ((xx + 2 * yy + i) % 16).astype(np.uint8)
+            return encode_png(raw[:, :, None], fo, gray_depth=4)
+        if mode == 3:
+            g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
+            a = ((23 * i + 31 * (xx + yy)) % 256).astype(np.uint8)
+            return encode_png(np.stack([g, a], axis=2), fo)
+        c = np.arange(3, dtype=np.int64)[None, None, :]
+        px = (
+            (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
+            % 256
+        ).astype(np.uint8)
+        data = encode_png(px, fo)
+        key = struct.pack(
+            ">HHH",
+            (3 * i) % 256,
+            (3 * i + 7) % 256,
+            (3 * i + 14) % 256,
+        )
+        j = data.find(b"IDAT") - 4
+        return data[:j] + _png_chunk(b"tRNS", key) + data[j:]
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4255,38 +4263,33 @@ def synth_tiff_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
        inverted; the decoder's photometric-0 re-inversion is what
        the hash certifies)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            mode = i % 4
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
-            )
-            c = np.arange(3, dtype=np.int64)[None, None, :]
-            if mode == 0:
-                px = (
-                    (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
-                    % 256
-                ).astype(np.uint8)
-                return encode_tiff(px, "none", "<")
-            if mode == 1:
-                g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
-                return encode_tiff(g[:, :, None], "packbits", ">")
-            if mode == 2:
-                px = (
-                    (5 * i + 13 * yy[:, :, None] + 7 * c) % 256
-                ).astype(np.uint8) * np.ones((1, w, 1), np.uint8)
-                return encode_tiff(px, "packbits", "<")
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        mode = i % 4
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        c = np.arange(3, dtype=np.int64)[None, None, :]
+        if mode == 0:
+            px = (
+                (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
+                % 256
+            ).astype(np.uint8)
+            return encode_tiff(px, "none", "<")
+        if mode == 1:
             g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
-            return encode_tiff(
-                g[:, :, None], "none", ">", white_is_zero=True
-            )
+            return encode_tiff(g[:, :, None], "packbits", ">")
+        if mode == 2:
+            px = (
+                (5 * i + 13 * yy[:, :, None] + 7 * c) % 256
+            ).astype(np.uint8) * np.ones((1, w, 1), np.uint8)
+            return encode_tiff(px, "packbits", "<")
+        g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
+        return encode_tiff(
+            g[:, :, None], "none", ">", white_is_zero=True
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4428,43 +4431,38 @@ def synth_qoi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
        INDEX hits dominate;
     3: RGBA gradient with a=(7i+x+3y)%256 — the RGBA op + alpha mean."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            mode = i % 4
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
-            )
-            c = np.arange(3, dtype=np.int64)[None, None, :]
-            if mode == 0:
-                px = (
-                    (3 * i + 5 * xx[:, :, None] + 11 * yy[:, :, None] + 7 * c)
-                    % 256
-                ).astype(np.uint8)
-                return encode_qoi(px)
-            if mode == 1:
-                px = (
-                    (5 * i + 13 * yy[:, :, None] + 7 * c) % 256
-                ).astype(np.uint8) * np.ones((1, w, 1), np.uint8)
-                return encode_qoi(px)
-            if mode == 2:
-                k = (xx + yy + i) % 4
-                px = ((3 * i + 17 * k[:, :, None] + 7 * c) % 256).astype(
-                    np.uint8
-                )
-                return encode_qoi(px)
-            rgb = (
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        mode = i % 4
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        c = np.arange(3, dtype=np.int64)[None, None, :]
+        if mode == 0:
+            px = (
                 (3 * i + 5 * xx[:, :, None] + 11 * yy[:, :, None] + 7 * c)
                 % 256
             ).astype(np.uint8)
-            a = ((7 * i + xx + 3 * yy) % 256).astype(np.uint8)
-            return encode_qoi(np.dstack([rgb, a]))
+            return encode_qoi(px)
+        if mode == 1:
+            px = (
+                (5 * i + 13 * yy[:, :, None] + 7 * c) % 256
+            ).astype(np.uint8) * np.ones((1, w, 1), np.uint8)
+            return encode_qoi(px)
+        if mode == 2:
+            k = (xx + yy + i) % 4
+            px = ((3 * i + 17 * k[:, :, None] + 7 * c) % 256).astype(
+                np.uint8
+            )
+            return encode_qoi(px)
+        rgb = (
+            (3 * i + 5 * xx[:, :, None] + 11 * yy[:, :, None] + 7 * c)
+            % 256
+        ).astype(np.uint8)
+        a = ((7 * i + xx + 3 * yy) % 256).astype(np.uint8)
+        return encode_qoi(np.dstack([rgb, a]))
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4758,39 +4756,34 @@ def synth_tiff_lzw_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     3: GRAY, LZW + predictor, little-endian, WHITE-IS-ZERO —
        g = (3i+5x+11y)%256 (inversion + predictor composed)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            mode = i % 4
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        mode = i % 4
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        c = np.arange(3, dtype=np.int64)[None, None, :]
+        if mode == 0:
+            px = (
+                (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
+                % 256
+            ).astype(np.uint8)
+            return encode_tiff(px, "lzw", "<", predictor=2)
+        if mode == 1:
+            g = ((5 * i + 13 * yy) % 256).astype(np.uint8)
+            return encode_tiff(g[:, :, None], "lzw", ">")
+        if mode == 2:
+            k = (xx + 2 * yy + i) % 16
+            px = ((3 * i + 17 * k[:, :, None] + 7 * c) % 256).astype(
+                np.uint8
             )
-            c = np.arange(3, dtype=np.int64)[None, None, :]
-            if mode == 0:
-                px = (
-                    (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
-                    % 256
-                ).astype(np.uint8)
-                return encode_tiff(px, "lzw", "<", predictor=2)
-            if mode == 1:
-                g = ((5 * i + 13 * yy) % 256).astype(np.uint8)
-                return encode_tiff(g[:, :, None], "lzw", ">")
-            if mode == 2:
-                k = (xx + 2 * yy + i) % 16
-                px = ((3 * i + 17 * k[:, :, None] + 7 * c) % 256).astype(
-                    np.uint8
-                )
-                return encode_tiff(px, "lzw", ">", predictor=2)
-            g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
-            return encode_tiff(
-                g[:, :, None], "lzw", "<", white_is_zero=True, predictor=2
-            )
+            return encode_tiff(px, "lzw", ">", predictor=2)
+        g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
+        return encode_tiff(
+            g[:, :, None], "lzw", "<", white_is_zero=True, predictor=2
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4812,29 +4805,24 @@ def synth_jpeg_lossless_payload(
     corpus-wide), g = (3i+5x+11y)%256. Lossless ⇒ exact
     id-arithmetic channel means."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            mode = i % 8
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
-            )
-            if mode == 0:
-                planes = [
-                    ((3 * i + 5 * xx + 11 * yy + 7 * c) % 256).astype(
-                        np.uint8
-                    )
-                    for c in range(3)
-                ]
-                return encode_jpeg_lossless(planes, predictor=7)
-            g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
-            return encode_jpeg_lossless([g], predictor=mode)
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        mode = i % 8
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        if mode == 0:
+            planes = [
+                ((3 * i + 5 * xx + 11 * yy + 7 * c) % 256).astype(
+                    np.uint8
+                )
+                for c in range(3)
+            ]
+            return encode_jpeg_lossless(planes, predictor=7)
+        g = ((3 * i + 5 * xx + 11 * yy) % 256).astype(np.uint8)
+        return encode_jpeg_lossless([g], predictor=mode)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -4956,19 +4944,14 @@ def synth_au_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decoded band means are closed-form integer arithmetic the oracle
     re-derives in SQL."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 64 + 4 * (i % 16)
-            u = ((3 * i + 5 * np.arange(n, dtype=np.int64)) % 256).astype(
-                np.uint8
-            )
-            return encode_au(u, encoding=1, sample_rate=8000)
+    def one(i: int) -> bytes:
+        n = 64 + 4 * (i % 16)
+        u = ((3 * i + 5 * np.arange(n, dtype=np.int64)) % 256).astype(
+            np.uint8
+        )
+        return encode_au(u, encoding=1, sample_rate=8000)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -4991,19 +4974,14 @@ def synth_au_float_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     reduce to integer arithmetic / 256 the oracle re-derives. Even
     ids ship float32 (enc 6), odd float64 (enc 7)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 64 + 4 * (i % 16)
-            v = ((3 * i + 5 * np.arange(n, dtype=np.int64)) % 512 - 256) / 256.0
-            if i % 2 == 0:
-                return encode_au(v.astype(">f4"), encoding=6, sample_rate=8000)
-            return encode_au(v.astype(">f8"), encoding=7, sample_rate=8000)
+    def one(i: int) -> bytes:
+        n = 64 + 4 * (i % 16)
+        v = ((3 * i + 5 * np.arange(n, dtype=np.int64)) % 512 - 256) / 256.0
+        if i % 2 == 0:
+            return encode_au(v.astype(">f4"), encoding=6, sample_rate=8000)
+        return encode_au(v.astype(">f8"), encoding=7, sample_rate=8000)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 def synth_au_alaw_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -5014,19 +4992,14 @@ def synth_au_alaw_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     decoded band means reduce to the XOR/segment/mantissa expansion
     the oracle re-derives in integer SQL."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 64 + 4 * (i % 16)
-            a = ((5 * i + 7 * np.arange(n, dtype=np.int64)) % 256).astype(
-                np.uint8
-            )
-            return encode_au(a, encoding=27, sample_rate=8000)
+    def one(i: int) -> bytes:
+        n = 64 + 4 * (i % 16)
+        a = ((5 * i + 7 * np.arange(n, dtype=np.int64)) % 256).astype(
+            np.uint8
+        )
+        return encode_au(a, encoding=27, sample_rate=8000)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -5049,31 +5022,26 @@ def synth_tiff_tiled_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     byte order by id%2 (the per-TILE predictor reset is what LZW
     certifies)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 20 + i % 17, 18 + i % 13
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
-            )
-            c = np.arange(3, dtype=np.int64)[None, None, :]
-            px = (
-                (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
-                % 256
-            ).astype(np.uint8)
-            comp = ["none", "lzw", "packbits"][i % 3]
-            return encode_tiff(
-                px,
-                comp,
-                "<" if i % 2 == 0 else ">",
-                predictor=2 if comp == "lzw" else 1,
-                tile=(16, 16),
-            )
+    def one(i: int) -> bytes:
+        w, h = 20 + i % 17, 18 + i % 13
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        c = np.arange(3, dtype=np.int64)[None, None, :]
+        px = (
+            (3 * i + 17 * xx[:, :, None] + 29 * yy[:, :, None] + 7 * c)
+            % 256
+        ).astype(np.uint8)
+        comp = ["none", "lzw", "packbits"][i % 3]
+        return encode_tiff(
+            px,
+            comp,
+            "<" if i % 2 == 0 else ">",
+            predictor=2 if comp == "lzw" else 1,
+            tile=(16, 16),
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -5199,35 +5167,30 @@ def synth_bmp8_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     layout (nibble rows / BI_RLE4) — the decode is identical, so the
     oracle is depth-agnostic while both depths stay load-bearing."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 5 + i % 8, 4 + i % 5
-            mode = i % 3
-            k = np.arange(16, dtype=np.int64)
-            palette = np.stack(
-                [
-                    (3 * i + 17 * k) % 256,
-                    (7 * i + 29 * k) % 256,
-                    (13 * i + 11 * k) % 256,
-                ],
-                axis=1,
-            ).astype(np.uint8)
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
-            )
-            if mode == 0:
-                idx = ((yy + i) % 16).astype(np.uint8)
-            else:
-                idx = ((xx + 2 * yy + i) % 16).astype(np.uint8)
-            return encode_bmp8_rle(
-                idx, palette, rle=mode != 2, bits=8 if i % 2 == 0 else 4
-            )
+    def one(i: int) -> bytes:
+        w, h = 5 + i % 8, 4 + i % 5
+        mode = i % 3
+        k = np.arange(16, dtype=np.int64)
+        palette = np.stack(
+            [
+                (3 * i + 17 * k) % 256,
+                (7 * i + 29 * k) % 256,
+                (13 * i + 11 * k) % 256,
+            ],
+            axis=1,
+        ).astype(np.uint8)
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        if mode == 0:
+            idx = ((yy + i) % 16).astype(np.uint8)
+        else:
+            idx = ((xx + 2 * yy + i) % 16).astype(np.uint8)
+        return encode_bmp8_rle(
+            idx, palette, rle=mode != 2, bits=8 if i % 2 == 0 else 4
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("image").alias("modality"),
@@ -5812,30 +5775,25 @@ def synth_flac_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     forced-FIXED(1) so every decoder path is load-bearing corpus-wide;
     n is divisible by 4, so band means are exact dyadic rationals."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 128 + 8 * (i % 8)
-            k = np.arange(n, dtype=np.int64)
-            if i % 7 == 0:
-                s = np.full(n, (3 * i) % 4096 - 2048, dtype=np.int64)
-            elif i % 11 == 0:
-                s = 4 * (((3 * i + 5 * k) % 1024) - 512)
-            else:
-                s = ((3 * i + 5 * k) % 4096) - 2048
-            plan = ["auto", "verbatim", "lpc", "fixed:1"]
-            return encode_flac(
-                s,
-                sample_rate=8000,
-                bps=16,
-                block_size=64,
-                subframe_plan=lambda f: plan[(i + f) % 4],
-            )
+    def one(i: int) -> bytes:
+        n = 128 + 8 * (i % 8)
+        k = np.arange(n, dtype=np.int64)
+        if i % 7 == 0:
+            s = np.full(n, (3 * i) % 4096 - 2048, dtype=np.int64)
+        elif i % 11 == 0:
+            s = 4 * (((3 * i + 5 * k) % 1024) - 512)
+        else:
+            s = ((3 * i + 5 * k) % 4096) - 2048
+        plan = ["auto", "verbatim", "lpc", "fixed:1"]
+        return encode_flac(
+            s,
+            sample_rate=8000,
+            bps=16,
+            block_size=64,
+            subframe_plan=lambda f: plan[(i + f) % 4],
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -5861,33 +5819,28 @@ def synth_gif_anim_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (13i+11j)%256); transparency, partial-frame offsets come from
     real GCE/descriptor bytes through the real LZW path."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h, nf = 6 + i % 4, 5 + i % 3, 2 + i % 3
-            pal = np.array(
-                [
-                    [(3 * i + 17 * j) % 256, (7 * i + 29 * j) % 256,
-                     (13 * i + 11 * j) % 256]
-                    for j in range(8)
-                ],
-                np.uint8,
-            )
-            frames, specs = [], []
-            for f in range(nf):
-                fw, fh = w - f, h - f
-                xx, yy = np.meshgrid(np.arange(fw), np.arange(fh))
-                fr = np.where((xx + yy) % 2 == 0, f, 5).astype(np.uint8)
-                frames.append(fr)
-                specs.append((0, 0, 1, 5))
-            return encode_gif(
-                frames, pal, frame_specs=specs, screen=(w, h), bg_index=6
-            )
+    def one(i: int) -> bytes:
+        w, h, nf = 6 + i % 4, 5 + i % 3, 2 + i % 3
+        pal = np.array(
+            [
+                [(3 * i + 17 * j) % 256, (7 * i + 29 * j) % 256,
+                 (13 * i + 11 * j) % 256]
+                for j in range(8)
+            ],
+            np.uint8,
+        )
+        frames, specs = [], []
+        for f in range(nf):
+            fw, fh = w - f, h - f
+            xx, yy = np.meshgrid(np.arange(fw), np.arange(fh))
+            fr = np.where((xx + yy) % 2 == 0, f, 5).astype(np.uint8)
+            frames.append(fr)
+            specs.append((0, 0, 1, 5))
+        return encode_gif(
+            frames, pal, frame_specs=specs, screen=(w, h), bg_index=6
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one).withColumn(
         "media_meta",
         F.struct(
             F.lit("video").alias("modality"),
@@ -6043,6 +5996,13 @@ def encode_mp3_stream(
     return bytes(out)
 
 
+_MP3_FIELDS = [
+    ("n_frames", "bigint"), ("total_samples", "bigint"),
+    ("duration_us", "bigint"), ("stream_bytes", "bigint"),
+    ("min_kbps", "bigint"), ("max_kbps", "bigint"), ("is_vbr", "bigint"),
+]
+
+
 def mp3_frame_census(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -6052,40 +6012,16 @@ def mp3_frame_census(
     arithmetic, SQL-re-derivable), byte total, min/max bitrate and a
     0/1 VBR flag (never a NULL boolean — the w9 hash rule)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                fr = _parse_mp3_frames(bytes(p))
-                n = len(fr)
-                samples = sum(f[2] for f in fr)
-                dur_us = sum(f[2] * 1_000_000 // f[1] for f in fr)
-                nbytes = sum(f[3] for f in fr)
-                rates = {f[0] for f in fr}
-                rows.append(
-                    (int(i), n, samples, dur_us, nbytes,
-                     min(rates), max(rates), int(len(rates) > 1))
-                )
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(cols[0], dtype="int64"),
-                    "n_frames": pd.Series(cols[1], dtype="int64"),
-                    "total_samples": pd.Series(cols[2], dtype="int64"),
-                    "duration_us": pd.Series(cols[3], dtype="int64"),
-                    "stream_bytes": pd.Series(cols[4], dtype="int64"),
-                    "min_kbps": pd.Series(cols[5], dtype="int64"),
-                    "max_kbps": pd.Series(cols[6], dtype="int64"),
-                    "is_vbr": pd.Series(cols[7], dtype="int64"),
-                }
-            )
+    def facts(b: bytes) -> tuple:
+        fr = _parse_mp3_frames(b)
+        rates = {f[0] for f in fr}
+        return (
+            len(fr), sum(f[2] for f in fr),
+            sum(f[2] * 1_000_000 // f[1] for f in fr), sum(f[3] for f in fr),
+            min(rates), max(rates), int(len(rates) > 1),
+        )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, n_frames bigint, total_samples bigint, "
-        "duration_us bigint, stream_bytes bigint, min_kbps bigint, "
-        "max_kbps bigint, is_vbr bigint",
-    )
+    return _census(df, id_col, payload_col, _MP3_FIELDS, facts)
 
 
 def synth_mp3_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -6099,24 +6035,19 @@ def synth_mp3_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     census reduces to pure id arithmetic over the public bitrate
     table."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 3 + i % 5
-            if i % 7 == 0:  # CBR stream
-                specs = [(1 + i % 14, (i + f) % 2) for f in range(n)]
-            else:
-                specs = [(1 + (i + f) % 14, (i + f) % 2) for f in range(n)]
-            return encode_mp3_stream(
-                specs,
-                id3v2_bytes=(10 + i % 50) if i % 2 == 0 else 0,
-                id3v1=(i % 3 == 0),
-            )
+    def one(i: int) -> bytes:
+        n = 3 + i % 5
+        if i % 7 == 0:  # CBR stream
+            specs = [(1 + i % 14, (i + f) % 2) for f in range(n)]
+        else:
+            specs = [(1 + (i + f) % 14, (i + f) % 2) for f in range(n)]
+        return encode_mp3_stream(
+            specs,
+            id3v2_bytes=(10 + i % 50) if i % 2 == 0 else 0,
+            id3v1=(i % 3 == 0),
+        )
 
-        return ids.map(one)
-
-    return spread(df, "light").withColumn("payload", make(F.col(id_col))).withColumn(
+    return _synth_payload(df, id_col, one, "light").withColumn(
         "media_meta",
         F.struct(
             F.lit("audio").alias("modality"),
@@ -6153,45 +6084,34 @@ def image_dhash(
     if hash_w < 1 or hash_h < 1 or hash_w * hash_h > 64:
         raise ValueError("hash grid must be 1..64 bits (hash_w * hash_h)")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                px = _decode_image_bytes(bytes(p))
-                h, w = px.shape[:2]
-                if h % hash_h or w % (hash_w + 1):
-                    raise ValueError(
-                        f"image {w}x{h} not divisible into "
-                        f"{hash_w + 1}x{hash_h} blocks (exact area-mean only)"
-                    )
-                gray = px.sum(axis=2, dtype=np.int64)
-                bh, bw = h // hash_h, w // (hash_w + 1)
-                s = gray.reshape(hash_h, bh, hash_w + 1, bw).sum(axis=(1, 3))
-                bits = (s[:, :-1] > s[:, 1:]).astype(np.int64)
-                flat = bits.reshape(-1)
-                # arange sized to the slice, not a fixed 32: grids
-                # under 32 bits (e.g. 4x4) are part of the advertised
-                # 1..64 range and must not shape-mismatch.
-                head = flat[:32]
-                hi = int((head << np.arange(len(head), dtype=np.int64)).sum())
-                lo = int(
-                    (flat[32:64] << np.arange(len(flat) - 32, dtype=np.int64)).sum()
-                ) if len(flat) > 32 else 0
-                rows.append((int(i), w, h, hi, lo))
-            cols = list(zip(*rows)) if rows else [[]] * 5
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(cols[0], dtype="int64"),
-                    "width": pd.Series(cols[1], dtype="int32"),
-                    "height": pd.Series(cols[2], dtype="int32"),
-                    "hash_hi": pd.Series(cols[3], dtype="int64"),
-                    "hash_lo": pd.Series(cols[4], dtype="int64"),
-                }
+    def facts(b: bytes) -> tuple:
+        px = _decode_image_bytes(b)
+        h, w = px.shape[:2]
+        if h % hash_h or w % (hash_w + 1):
+            raise ValueError(
+                f"image {w}x{h} not divisible into "
+                f"{hash_w + 1}x{hash_h} blocks (exact area-mean only)"
             )
+        gray = px.sum(axis=2, dtype=np.int64)
+        bh, bw = h // hash_h, w // (hash_w + 1)
+        s = gray.reshape(hash_h, bh, hash_w + 1, bw).sum(axis=(1, 3))
+        bits = (s[:, :-1] > s[:, 1:]).astype(np.int64)
+        flat = bits.reshape(-1)
+        # arange sized to the slice, not a fixed 32: grids under 32
+        # bits (e.g. 4x4) are part of the advertised 1..64 range and
+        # must not shape-mismatch.
+        head = flat[:32]
+        hi = int((head << np.arange(len(head), dtype=np.int64)).sum())
+        lo = int(
+            (flat[32:64] << np.arange(len(flat) - 32, dtype=np.int64)).sum()
+        ) if len(flat) > 32 else 0
+        return w, h, hi, lo
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, width int, height int, hash_hi bigint, hash_lo bigint",
+    return _census(
+        df, id_col, payload_col,
+        [("width", "int"), ("height", "int"),
+         ("hash_hi", "bigint"), ("hash_lo", "bigint")],
+        facts,
     )
 
 
@@ -6205,35 +6125,30 @@ def synth_dhash_pgm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     are invariant, which is the dHash property the d19 query
     certifies."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            if i >= 200000:
-                raise ValueError(
-                    "dhash twin convention violated: id %d >= 200000 "
-                    "implies a REAL doc_id >= 100000 in the fixture, "
-                    "which the 'id >= 100000 means twin of id-100000' "
-                    "encoding would silently reinterpret as a twin "
-                    "(and twin ids would collide with real ids); "
-                    "regenerate twins with a larger offset" % i
-                )
-            orig = i if i < 100000 else i - 100000
-            shift = 0 if i < 100000 else 10
-            w, h = 18, 16
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+    def one(i: int) -> bytes:
+        if i >= 200000:
+            raise ValueError(
+                "dhash twin convention violated: id %d >= 200000 "
+                "implies a REAL doc_id >= 100000 in the fixture, "
+                "which the 'id >= 100000 means twin of id-100000' "
+                "encoding would silently reinterpret as a twin "
+                "(and twin ids would collide with real ids); "
+                "regenerate twins with a larger offset" % i
             )
-            g = (
-                (3 * orig + 17 * xx + 29 * yy + 41 * ((orig + xx * yy) % 7))
-                % 240
-                + shift
-            ).astype(np.uint8)
-            return b"P5\n# dhash\n18 16\n255\n" + g.tobytes()
+        orig = i if i < 100000 else i - 100000
+        shift = 0 if i < 100000 else 10
+        w, h = 18, 16
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        g = (
+            (3 * orig + 17 * xx + 29 * yy + 41 * ((orig + xx * yy) % 7))
+            % 240
+            + shift
+        ).astype(np.uint8)
+        return b"P5\n# dhash\n18 16\n255\n" + g.tobytes()
 
-        return ids.map(one)
-
-    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one, "light")
 
 
 def image_dhash_incremental(
@@ -6494,38 +6409,33 @@ def synth_dhash_noisy_pgm_payload(
     arise from a REAL fixture doc_id >= 100000 being bumped) raises
     instead of silently corrupting the fixture."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            if i >= 200000:
-                raise ValueError(
-                    "dhash twin convention violated: id %d >= 200000 "
-                    "implies a REAL doc_id >= 100000 in the fixture, "
-                    "which the 'id >= 100000 means twin of id-100000' "
-                    "encoding would silently reinterpret as a twin "
-                    "(and twin ids would collide with real ids); "
-                    "regenerate twins with a larger offset" % i
-                )
-            orig = i if i < 100000 else i - 100000
-            w, h = 18, 16
-            xx, yy = np.meshgrid(
-                np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+    def one(i: int) -> bytes:
+        if i >= 200000:
+            raise ValueError(
+                "dhash twin convention violated: id %d >= 200000 "
+                "implies a REAL doc_id >= 100000 in the fixture, "
+                "which the 'id >= 100000 means twin of id-100000' "
+                "encoding would silently reinterpret as a twin "
+                "(and twin ids would collide with real ids); "
+                "regenerate twins with a larger offset" % i
             )
-            g = (
-                3 * orig + 17 * xx + 29 * yy + 41 * ((orig + xx * yy) % 7)
-            ) % 160
-            if i >= 100000:
-                bx0, by0 = orig % 8, (orig // 8) % 8
-                mask = (xx // 2 == bx0) & (yy // 2 == by0)
-                g = g + 80 * mask
-            return b"P5\n# dhash-noisy\n18 16\n255\n" + g.astype(
-                np.uint8
-            ).tobytes()
+        orig = i if i < 100000 else i - 100000
+        w, h = 18, 16
+        xx, yy = np.meshgrid(
+            np.arange(w, dtype=np.int64), np.arange(h, dtype=np.int64)
+        )
+        g = (
+            3 * orig + 17 * xx + 29 * yy + 41 * ((orig + xx * yy) % 7)
+        ) % 160
+        if i >= 100000:
+            bx0, by0 = orig % 8, (orig // 8) % 8
+            mask = (xx // 2 == bx0) & (yy // 2 == by0)
+            g = g + 80 * mask
+        return b"P5\n# dhash-noisy\n18 16\n255\n" + g.astype(
+            np.uint8
+        ).tobytes()
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 # --- video: container-layer census (ANY codec, zero decode) ----------------
@@ -6668,6 +6578,23 @@ def _parse_avi_container(b: bytes) -> dict:
     return info
 
 
+_AVI_FIELDS = [
+    ("codec", "string"), ("width", "bigint"), ("height", "bigint"),
+    ("n_frames", "bigint"), ("duration_us", "bigint"),
+    ("video_bytes", "bigint"), ("has_index", "bigint"),
+]
+
+
+def _avi_facts(c: dict) -> tuple:
+    """``_AVI_FIELDS`` from an AVI container walk (in-memory or
+    ranged): one frame per video chunk, exact µs = chunks × avih
+    µs/frame."""
+    return (
+        c["codec"] or "", c["width"], c["height"], c["n_chunks"],
+        c["n_chunks"] * c["us_per_frame"], c["video_bytes"], c["has_index"],
+    )
+
+
 def avi_container_census(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -6677,38 +6604,9 @@ def avi_container_census(
     avih µs/frame), payload byte total, index presence. This is the
     triage a 100 TB crawl runs on video it will never decode —
     deterministic for every codec, so fully SQL-oracle-able."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                c = _parse_avi_container(bytes(p))
-                rows.append(
-                    (
-                        int(i), c["codec"] or "", c["width"], c["height"],
-                        c["n_chunks"], c["n_chunks"] * c["us_per_frame"],
-                        c["video_bytes"], c["has_index"],
-                    )
-                )
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(cols[0], dtype="int64"),
-                    "codec": pd.Series(cols[1], dtype="object"),
-                    "width": pd.Series(cols[2], dtype="int64"),
-                    "height": pd.Series(cols[3], dtype="int64"),
-                    "n_frames": pd.Series(cols[4], dtype="int64"),
-                    "duration_us": pd.Series(cols[5], dtype="int64"),
-                    "video_bytes": pd.Series(cols[6], dtype="int64"),
-                    "has_index": pd.Series(cols[7], dtype="int64"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, codec string, width bigint, height bigint, "
-        "n_frames bigint, duration_us bigint, video_bytes bigint, "
-        "has_index bigint",
+    return _census(
+        df, id_col, payload_col, _AVI_FIELDS,
+        lambda b: _avi_facts(_parse_avi_container(b)),
     )
 
 
@@ -6720,24 +6618,19 @@ def synth_avi_stub_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     exact id arithmetic a SQL oracle re-derives."""
     codecs = [b"H264", b"VP80", b"MP42", b"MJPG"]
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 2 + i % 5
-            sizes = [100 + 37 * ((i + f) % 11) for f in range(n)]
-            return encode_avi_stub(
-                sizes,
-                codec=codecs[i % 4],
-                fps=24 if i % 2 == 0 else 30,
-                width=320 + 16 * (i % 4),
-                height=240,
-                with_index=(i % 3 != 0),
-            )
+    def one(i: int) -> bytes:
+        n = 2 + i % 5
+        sizes = [100 + 37 * ((i + f) % 11) for f in range(n)]
+        return encode_avi_stub(
+            sizes,
+            codec=codecs[i % 4],
+            fps=24 if i % 2 == 0 else 30,
+            width=320 + 16 * (i % 4),
+            height=240,
+            with_index=(i % 3 != 0),
+        )
 
-        return ids.map(one)
-
-    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one, "light")
 
 
 # --- video: MP4 / ISO-BMFF container census (the dominant wrapper) ---------
@@ -6882,6 +6775,24 @@ def _parse_mp4_container(b: bytes) -> dict:
     return info
 
 
+_MP4_FIELDS = [
+    ("brand", "string"), ("timescale", "bigint"),
+    ("duration_ticks", "bigint"), ("duration_us", "bigint"),
+    ("n_tracks", "bigint"), ("video_codec", "string"),
+    ("audio_codec", "string"), ("mdat_bytes", "bigint"),
+]
+
+
+def _mp4_facts(c: dict) -> tuple:
+    """``_MP4_FIELDS`` from an ISO-BMFF walk (in-memory or ranged):
+    exact µs = ticks · 10⁶ // timescale."""
+    return (
+        c["brand"], c["timescale"], c["duration"],
+        c["duration"] * 1_000_000 // c["timescale"], c["n_tracks"],
+        c["video_codec"], c["audio_codec"], c["mdat_bytes"],
+    )
+
+
 def mp4_container_census(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -6891,40 +6802,9 @@ def mp4_container_census(
     first video/audio codec fourccs, mdat byte total — the triage the
     dominant web-video container gets at 100 TB, deterministic for
     every codec, fully SQL-oracle-able (mm28's AVI story for MP4)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                c = _parse_mp4_container(bytes(p))
-                rows.append(
-                    (
-                        int(i), c["brand"], c["timescale"], c["duration"],
-                        c["duration"] * 1_000_000 // c["timescale"],
-                        c["n_tracks"], c["video_codec"], c["audio_codec"],
-                        c["mdat_bytes"],
-                    )
-                )
-            cols = list(zip(*rows)) if rows else [[]] * 9
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(cols[0], dtype="int64"),
-                    "brand": pd.Series(cols[1], dtype="object"),
-                    "timescale": pd.Series(cols[2], dtype="int64"),
-                    "duration_ticks": pd.Series(cols[3], dtype="int64"),
-                    "duration_us": pd.Series(cols[4], dtype="int64"),
-                    "n_tracks": pd.Series(cols[5], dtype="int64"),
-                    "video_codec": pd.Series(cols[6], dtype="object"),
-                    "audio_codec": pd.Series(cols[7], dtype="object"),
-                    "mdat_bytes": pd.Series(cols[8], dtype="int64"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, brand string, timescale bigint, duration_ticks bigint, "
-        "duration_us bigint, n_tracks bigint, video_codec string, "
-        "audio_codec string, mdat_bytes bigint",
+    return _census(
+        df, id_col, payload_col, _MP4_FIELDS,
+        lambda b: _mp4_facts(_parse_mp4_container(b)),
     )
 
 
@@ -6936,23 +6816,18 @@ def synth_mp4_stub_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     oracle re-derives."""
     vcodecs = [b"avc1", b"hvc1", b"vp09"]
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            tracks = [(b"vide", vcodecs[i % 3])]
-            if i % 4 != 0:
-                tracks.append((b"soun", b"mp4a"))
-            return encode_mp4_stub(
-                duration_ticks=600 + 37 * (i % 50),
-                timescale=600 if i % 2 == 0 else 1000,
-                tracks=tracks,
-                mdat_bytes=200 + 13 * (i % 17),
-            )
+    def one(i: int) -> bytes:
+        tracks = [(b"vide", vcodecs[i % 3])]
+        if i % 4 != 0:
+            tracks.append((b"soun", b"mp4a"))
+        return encode_mp4_stub(
+            duration_ticks=600 + 37 * (i % 50),
+            timescale=600 if i % 2 == 0 else 1000,
+            tracks=tracks,
+            mdat_bytes=200 + 13 * (i % 17),
+        )
 
-        return ids.map(one)
-
-    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one, "light")
 
 
 # --- TIFF CCITT Group 3 / Group 4 (ITU-T T.4 / T.6) ------------------------
@@ -7454,22 +7329,17 @@ def synth_tiff_ccitt_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     coding restart is load-bearing corpus-wide. The black-pixel
     count reduces to pure id arithmetic a SQL oracle re-derives."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 20 + i % 13, 16 + i % 11
-            xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-            bw = ((3 * i + 17 * xx + 29 * yy) % 7 < 3).astype(np.uint8)
-            comp = (2, 3, 4, 3)[i % 4]
-            rps = 8 if i % 5 == 0 else None
-            return encode_tiff_ccitt(
-                bw, comp, rows_per_strip=rps, t4_2d=(i % 4 == 3)
-            )
+    def one(i: int) -> bytes:
+        w, h = 20 + i % 13, 16 + i % 11
+        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
+        bw = ((3 * i + 17 * xx + 29 * yy) % 7 < 3).astype(np.uint8)
+        comp = (2, 3, 4, 3)[i % 4]
+        rps = 8 if i % 5 == 0 else None
+        return encode_tiff_ccitt(
+            bw, comp, rows_per_strip=rps, t4_2d=(i % 4 == 3)
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 def tiff_bilevel_census(
@@ -7479,29 +7349,17 @@ def tiff_bilevel_census(
     included) and census exact integer facts: geometry + black/white
     pixel counts. mapInPandas, map-side only, zero shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                px = _parse_tiff(bytes(p))
-                h, w = px.shape[:2]
-                n_black = int((px[:, :, 0] == 0).sum())
-                rows.append((int(i), w, h, n_black, w * h - n_black))
-            cols = list(zip(*rows)) if rows else [[]] * 5
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(cols[0], dtype="int64"),
-                    "width": pd.Series(cols[1], dtype="int64"),
-                    "height": pd.Series(cols[2], dtype="int64"),
-                    "n_black": pd.Series(cols[3], dtype="int64"),
-                    "n_white": pd.Series(cols[4], dtype="int64"),
-                }
-            )
+    def facts(b: bytes) -> tuple:
+        px = _parse_tiff(b)
+        h, w = px.shape[:2]
+        n_black = int((px[:, :, 0] == 0).sum())
+        return w, h, n_black, w * h - n_black
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, width bigint, height bigint, "
-        "n_black bigint, n_white bigint",
+    return _census(
+        df, id_col, payload_col,
+        [("width", "bigint"), ("height", "bigint"),
+         ("n_black", "bigint"), ("n_white", "bigint")],
+        facts,
     )
 
 
@@ -7598,23 +7456,18 @@ def synth_tiff_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (rows_per_strip=10). Lossless ⇒ channel means are exact id
     arithmetic for the oracle."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 20 + i % 17, 18 + i % 13
-            xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-            g = ((3 * i + 17 * xx + 29 * yy) % 256).astype(np.uint8)
-            return encode_tiff_jpeg(
-                g,
-                rows_per_strip=10 if i % 3 == 0 else None,
-                predictor=1 + i % 7,
-                factor_tables=(i % 2 == 0),
-            )
+    def one(i: int) -> bytes:
+        w, h = 20 + i % 17, 18 + i % 13
+        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
+        g = ((3 * i + 17 * xx + 29 * yy) % 256).astype(np.uint8)
+        return encode_tiff_jpeg(
+            g,
+            rows_per_strip=10 if i % 3 == 0 else None,
+            predictor=1 + i % 7,
+            factor_tables=(i % 2 == 0),
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 def encode_tiff_deep(
@@ -7695,29 +7548,24 @@ def synth_tiff_deep_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     channel value is exact id arithmetic (16-bit reduces by high
     byte = v div 256)."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            w, h = 20 + i % 11, 14 + i % 7
-            comp = (1, 5, 32773)[(i // 2) % 3]
-            xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-            if i % 2 == 0:
-                v = ((257 * i + 131 * xx + 173 * yy) % 65536).astype(
-                    np.uint16
-                )
-                return encode_tiff_deep(
-                    v, 16, "<" if i % 4 == 0 else ">", 1,
-                    comp, 1 + (i // 4) % 2,
-                )
-            bw = ((3 * i + 17 * xx + 29 * yy) % 5 < 2).astype(np.uint8)
-            return encode_tiff_deep(
-                bw, 1, "<", 1 if i % 4 == 1 else 0, comp, 1
+    def one(i: int) -> bytes:
+        w, h = 20 + i % 11, 14 + i % 7
+        comp = (1, 5, 32773)[(i // 2) % 3]
+        xx, yy = np.meshgrid(np.arange(w), np.arange(h))
+        if i % 2 == 0:
+            v = ((257 * i + 131 * xx + 173 * yy) % 65536).astype(
+                np.uint16
             )
+            return encode_tiff_deep(
+                v, 16, "<" if i % 4 == 0 else ">", 1,
+                comp, 1 + (i // 4) % 2,
+            )
+        bw = ((3 * i + 17 * xx + 29 * yy) % 5 < 2).astype(np.uint8)
+        return encode_tiff_deep(
+            bw, 1, "<", 1 if i % 4 == 1 else 0, comp, 1
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 # --- WebP: container/header census (zero decode) ---------------------------
@@ -7844,33 +7692,14 @@ def webp_header_census(
     """Per-payload WebP header census via mapInPandas (map-side only,
     zero shuffle, zero decode): variant, canvas geometry, alpha/anim
     flags, compressed image bytes — the web-image triage facts."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                c = _parse_webp_header(bytes(p))
-                rows.append(
-                    (int(i), c["variant"], c["width"], c["height"],
-                     c["has_alpha"], c["has_anim"], c["image_bytes"])
-                )
-            cols = list(zip(*rows)) if rows else [[]] * 7
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(cols[0], dtype="int64"),
-                    "variant": pd.Series(cols[1], dtype="object"),
-                    "width": pd.Series(cols[2], dtype="int64"),
-                    "height": pd.Series(cols[3], dtype="int64"),
-                    "has_alpha": pd.Series(cols[4], dtype="int64"),
-                    "has_anim": pd.Series(cols[5], dtype="int64"),
-                    "image_bytes": pd.Series(cols[6], dtype="int64"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, variant string, width bigint, height bigint, "
-        "has_alpha bigint, has_anim bigint, image_bytes bigint",
+    fields = [
+        ("variant", "string"), ("width", "bigint"), ("height", "bigint"),
+        ("has_alpha", "bigint"), ("has_anim", "bigint"),
+        ("image_bytes", "bigint"),
+    ]
+    return _census(
+        df, id_col, payload_col, fields,
+        lambda b: _pick(_parse_webp_header(b), fields),
     )
 
 
@@ -7881,23 +7710,18 @@ def synth_webp_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ids with id%5 == 0, payload 40 + id%30 opaque bytes — all exact
     id arithmetic for the oracle."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            variant = ("lossy", "lossless", "extended")[i % 3]
-            return encode_webp_stub(
-                16 + i % 50,
-                12 + i % 40,
-                variant,
-                alpha=(i % 2 == 1 and variant != "lossy"),
-                anim=(variant == "extended" and i % 5 == 0),
-                payload_bytes=40 + i % 30,
-            )
+    def one(i: int) -> bytes:
+        variant = ("lossy", "lossless", "extended")[i % 3]
+        return encode_webp_stub(
+            16 + i % 50,
+            12 + i % 40,
+            variant,
+            alpha=(i % 2 == 1 and variant != "lossy"),
+            anim=(variant == "extended" and i % 5 == 0),
+            payload_bytes=40 + i % 30,
+        )
 
-        return ids.map(one)
-
-    return spread(df, "light").withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one, "light")
 
 
 # --- Ogg/Vorbis: container census (zero decode) ----------------------------
@@ -8046,33 +7870,20 @@ def ogg_vorbis_census(
     count, EXACT duration in integer microseconds (last granule ·
     10⁶ // rate), audio byte total, EOS presence."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, p in zip(pdf[id_col], pdf[payload_col]):
-                c = _parse_ogg_vorbis(bytes(p))
-                rows.append(
-                    (int(i), c["sample_rate"], c["channels"], c["n_pages"],
-                     c["last_granule"] * 1_000_000 // c["sample_rate"],
-                     c["audio_bytes"], c["has_eos"])
-                )
-            cols = list(zip(*rows)) if rows else [[]] * 7
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(cols[0], dtype="int64"),
-                    "sample_rate": pd.Series(cols[1], dtype="int64"),
-                    "channels": pd.Series(cols[2], dtype="int64"),
-                    "n_pages": pd.Series(cols[3], dtype="int64"),
-                    "duration_us": pd.Series(cols[4], dtype="int64"),
-                    "audio_bytes": pd.Series(cols[5], dtype="int64"),
-                    "has_eos": pd.Series(cols[6], dtype="int64"),
-                }
-            )
+    def facts(b: bytes) -> tuple:
+        c = _parse_ogg_vorbis(b)
+        return (
+            c["sample_rate"], c["channels"], c["n_pages"],
+            c["last_granule"] * 1_000_000 // c["sample_rate"],
+            c["audio_bytes"], c["has_eos"],
+        )
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, sample_rate bigint, channels bigint, n_pages bigint, "
-        "duration_us bigint, audio_bytes bigint, has_eos bigint",
+    return _census(
+        df, id_col, payload_col,
+        [("sample_rate", "bigint"), ("channels", "bigint"),
+         ("n_pages", "bigint"), ("duration_us", "bigint"),
+         ("audio_bytes", "bigint"), ("has_eos", "bigint")],
+        facts,
     )
 
 
@@ -8081,21 +7892,16 @@ def synth_ogg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     1 + id%2, 2 + id%4 audio pages of 50 + (id + k)%40 opaque bytes,
     final granule 1000 + 37·(id%100) — all exact id arithmetic."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 2 + i % 4
-            return encode_ogg_vorbis_stub(
-                8000 if i % 2 == 0 else 44100,
-                1 + i % 2,
-                [50 + (i + k) % 40 for k in range(n)],
-                1000 + 37 * (i % 100),
-            )
+    def one(i: int) -> bytes:
+        n = 2 + i % 4
+        return encode_ogg_vorbis_stub(
+            8000 if i % 2 == 0 else 44100,
+            1 + i % 2,
+            [50 + (i + k) % 40 for k in range(n)],
+            1000 + 37 * (i % 100),
+        )
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 # ---------------------------------------------------------------------------
@@ -8304,33 +8110,55 @@ def synth_wav_ima_adpcm_payload(
     authored DIRECTLY (not via the encoder) so engine decode and
     oracle share no code path at all."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            m = 8 + i % 8
-            pred = (37 * i) % 4096 - 2048
-            index = i % 89
-            nibs = np.array(
-                [(7 * i + 3 * k) % 16 for k in range(2 * m)], np.uint8
-            )
-            packed = (nibs[0::2] | (nibs[1::2] << 4)).tobytes()
-            block_align = 4 + m
-            n_samples = 1 + 2 * m
-            fmt = struct.pack(
-                "<HHIIHHHH", 0x11, 1, 8000,
-                8000 * block_align // n_samples, block_align, 4,
-                2, n_samples,
-            )
-            body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            body += b"fact" + struct.pack("<II", 4, n_samples)
-            data = struct.pack("<hBB", pred, index, 0) + packed
-            body += b"data" + struct.pack("<I", len(data)) + data
-            return b"RIFF" + struct.pack("<I", len(body)) + body
+    def one(i: int) -> bytes:
+        m = 8 + i % 8
+        pred = (37 * i) % 4096 - 2048
+        index = i % 89
+        nibs = np.array(
+            [(7 * i + 3 * k) % 16 for k in range(2 * m)], np.uint8
+        )
+        packed = (nibs[0::2] | (nibs[1::2] << 4)).tobytes()
+        block_align = 4 + m
+        n_samples = 1 + 2 * m
+        fmt = struct.pack(
+            "<HHIIHHHH", 0x11, 1, 8000,
+            8000 * block_align // n_samples, block_align, 4,
+            2, n_samples,
+        )
+        body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        body += b"fact" + struct.pack("<II", 4, n_samples)
+        data = struct.pack("<hBB", pred, index, 0) + packed
+        body += b"data" + struct.pack("<I", len(data)) + data
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-        return ids.map(one)
+    return _synth_payload(df, id_col, one)
 
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+
+def _adpcm_census(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    decode: Callable[[bytes], tuple[int, np.ndarray, int]],
+    end_state: str,
+) -> DataFrame:
+    """Exact integer facts of one decoded ADPCM stream: count, µs
+    duration, sum/min/max/last sample, and the decoder's final state
+    (IMA step index or MS delta) as column ``end_state``."""
+
+    def facts(b: bytes) -> tuple:
+        rate, s, end = decode(b)
+        return (
+            int(s.size), int(s.size) * 1_000_000 // rate, int(s.sum()),
+            int(s.min()), int(s.max()), int(s[-1]), int(end),
+        )
+
+    return _census(
+        df, id_col, payload_col,
+        [("n_samples", "bigint"), ("duration_us", "bigint"),
+         ("sum_q", "bigint"), ("min_q", "bigint"), ("max_q", "bigint"),
+         ("last_q", "bigint"), (end_state, "bigint")],
+        facts,
+    )
 
 
 def wav_adpcm_census(
@@ -8341,37 +8169,8 @@ def wav_adpcm_census(
     decoded int16 stream: count, µs duration, sum/min/max/last
     sample, final step index. Integers end-to-end ⇒ hash-exact
     against the recursive-CTE oracle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cols = [], [[] for _ in range(7)]
-            for i, raw in zip(pdf[id_col], pdf[payload_col]):
-                rate, s, end_idx = _decode_wav_ima_adpcm(bytes(raw))
-                ids.append(int(i))
-                cols[0].append(int(s.size))
-                cols[1].append(int(s.size) * 1_000_000 // rate)
-                cols[2].append(int(s.sum()))
-                cols[3].append(int(s.min()))
-                cols[4].append(int(s.max()))
-                cols[5].append(int(s[-1]))
-                cols[6].append(int(end_idx))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(cols[0], dtype="int64"),
-                    "duration_us": pd.Series(cols[1], dtype="int64"),
-                    "sum_q": pd.Series(cols[2], dtype="int64"),
-                    "min_q": pd.Series(cols[3], dtype="int64"),
-                    "max_q": pd.Series(cols[4], dtype="int64"),
-                    "last_q": pd.Series(cols[5], dtype="int64"),
-                    "end_index": pd.Series(cols[6], dtype="int64"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, n_samples bigint, duration_us bigint, sum_q bigint, "
-        "min_q bigint, max_q bigint, last_q bigint, end_index bigint",
+    return _adpcm_census(
+        df, id_col, payload_col, _decode_wav_ima_adpcm, "end_index"
     )
 
 
@@ -8556,36 +8355,31 @@ def synth_wav_ms_adpcm_payload(
     16 — authored directly (no encoder) so engine decode and the
     recursive-CTE oracle share no code path."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            m = 8 + i % 8
-            cs = np.array(
-                [(5 * i + 7 * k) % 16 for k in range(2 * m)], np.uint8
-            )
-            packed = ((cs[0::2] << 4) | cs[1::2]).tobytes()
-            n_samples = 2 + 2 * m
-            block_align = 7 + m
-            ext = struct.pack("<HH", n_samples, 7) + b"".join(
-                struct.pack("<hh", a, b_) for a, b_ in MS_ADPCM_COEFFS
-            )
-            fmt = struct.pack(
-                "<HHIIHHH", 0x02, 1, 8000,
-                8000 * block_align // n_samples, block_align, 4, len(ext),
-            ) + ext
-            body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            body += b"fact" + struct.pack("<II", 4, n_samples)
-            data = struct.pack(
-                "<Bhhh", i % 7, 16 + (13 * i) % 1000,
-                (29 * i) % 4096 - 2048, (17 * i) % 4096 - 2048,
-            ) + packed
-            body += b"data" + struct.pack("<I", len(data)) + data
-            return b"RIFF" + struct.pack("<I", len(body)) + body
+    def one(i: int) -> bytes:
+        m = 8 + i % 8
+        cs = np.array(
+            [(5 * i + 7 * k) % 16 for k in range(2 * m)], np.uint8
+        )
+        packed = ((cs[0::2] << 4) | cs[1::2]).tobytes()
+        n_samples = 2 + 2 * m
+        block_align = 7 + m
+        ext = struct.pack("<HH", n_samples, 7) + b"".join(
+            struct.pack("<hh", a, b_) for a, b_ in MS_ADPCM_COEFFS
+        )
+        fmt = struct.pack(
+            "<HHIIHHH", 0x02, 1, 8000,
+            8000 * block_align // n_samples, block_align, 4, len(ext),
+        ) + ext
+        body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        body += b"fact" + struct.pack("<II", 4, n_samples)
+        data = struct.pack(
+            "<Bhhh", i % 7, 16 + (13 * i) % 1000,
+            (29 * i) % 4096 - 2048, (17 * i) % 4096 - 2048,
+        ) + packed
+        body += b"data" + struct.pack("<I", len(data)) + data
+        return b"RIFF" + struct.pack("<I", len(body)) + body
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 def wav_ms_adpcm_census(
@@ -8595,37 +8389,8 @@ def wav_ms_adpcm_census(
     map-side only) → exact integer facts: count, µs duration,
     sum/min/max/last sample, final delta. Hash-exact vs the
     recursive-CTE oracle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cols = [], [[] for _ in range(7)]
-            for i, raw in zip(pdf[id_col], pdf[payload_col]):
-                rate, s, end_delta = _decode_wav_ms_adpcm(bytes(raw))
-                ids.append(int(i))
-                cols[0].append(int(s.size))
-                cols[1].append(int(s.size) * 1_000_000 // rate)
-                cols[2].append(int(s.sum()))
-                cols[3].append(int(s.min()))
-                cols[4].append(int(s.max()))
-                cols[5].append(int(s[-1]))
-                cols[6].append(int(end_delta))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(cols[0], dtype="int64"),
-                    "duration_us": pd.Series(cols[1], dtype="int64"),
-                    "sum_q": pd.Series(cols[2], dtype="int64"),
-                    "min_q": pd.Series(cols[3], dtype="int64"),
-                    "max_q": pd.Series(cols[4], dtype="int64"),
-                    "last_q": pd.Series(cols[5], dtype="int64"),
-                    "end_delta": pd.Series(cols[6], dtype="int64"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, n_samples bigint, duration_us bigint, sum_q bigint, "
-        "min_q bigint, max_q bigint, last_q bigint, end_delta bigint",
+    return _adpcm_census(
+        df, id_col, payload_col, _decode_wav_ms_adpcm, "end_delta"
     )
 
 
@@ -8861,26 +8626,48 @@ def synth_mkv_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     BODY sizes are 40 + (id+j)%25 + 3 vint-accounting bytes — all
     exact id arithmetic for the oracle."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            return encode_matroska_stub(
-                "webm" if i % 2 == 0 else "matroska",
-                1000000 if i % 3 != 1 else 500000,
-                600 + 37 * (i % 50),
-                ("V_VP9", "V_VP8", "V_AV1")[i % 3],
-                320 + 16 * (i % 8),
-                240 + 8 * (i % 5),
-                None if i % 3 == 0 else ("A_OPUS" if i % 2 == 0 else "A_VORBIS"),
-                48000.0 if i % 2 == 0 else 44100.0,
-                1 + i % 2,
-                [43 + (i + j) % 25 for j in range(1 + i % 3)],
-            )
+    def one(i: int) -> bytes:
+        return encode_matroska_stub(
+            "webm" if i % 2 == 0 else "matroska",
+            1000000 if i % 3 != 1 else 500000,
+            600 + 37 * (i % 50),
+            ("V_VP9", "V_VP8", "V_AV1")[i % 3],
+            320 + 16 * (i % 8),
+            240 + 8 * (i % 5),
+            None if i % 3 == 0 else ("A_OPUS" if i % 2 == 0 else "A_VORBIS"),
+            48000.0 if i % 2 == 0 else 44100.0,
+            1 + i % 2,
+            [43 + (i + j) % 25 for j in range(1 + i % 3)],
+        )
 
-        return ids.map(one)
+    return _synth_payload(df, id_col, one)
 
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+
+_MKV_FIELDS = [
+    ("doc_type", "string"), ("timestamp_scale", "bigint"),
+    ("duration_us", "bigint"), ("n_tracks", "bigint"),
+    ("n_video", "bigint"), ("n_audio", "bigint"),
+    ("video_codec", "string"), ("audio_codec", "string"),
+    ("width", "bigint"), ("height", "bigint"), ("cluster_bytes", "bigint"),
+]
+
+
+def _mkv_facts(f: dict) -> tuple:
+    """``_MKV_FIELDS`` from an EBML walk (in-memory or ranged): exact
+    µs = Duration ticks · TimestampScale ns // 1000, so a non-integral
+    Duration raises rather than round."""
+    dur_ticks = f["duration_ticks"]
+    if dur_ticks != int(dur_ticks):
+        raise ValueError(
+            f"non-integral Matroska Duration {dur_ticks} (census emits "
+            "exact integer µs only)"
+        )
+    return (
+        f["doc_type"], int(f["timestamp_scale"]),
+        int(dur_ticks) * int(f["timestamp_scale"]) // 1000,
+        f["n_tracks"], f["n_video"], f["n_audio"], f["video_codec"],
+        f["audio_codec"], f["width"], f["height"], f["cluster_bytes"],
+    )
 
 
 def matroska_census(
@@ -8890,54 +8677,9 @@ def matroska_census(
     only) → doc_type, timestamp scale, exact integer-µs duration
     (integral Duration ticks by construction), track counts/codecs,
     video dimensions, cluster payload bytes."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, raw in zip(pdf[id_col], pdf[payload_col]):
-                f = _parse_matroska(bytes(raw))
-                dur_ticks = f["duration_ticks"]
-                if dur_ticks != int(dur_ticks):
-                    raise ValueError(
-                        f"non-integral Duration {dur_ticks} (census "
-                        "emits exact integer µs only)"
-                    )
-                rows.append({
-                    "id": int(i),
-                    "doc_type": f["doc_type"],
-                    "timestamp_scale": int(f["timestamp_scale"]),
-                    "duration_us": int(dur_ticks)
-                    * int(f["timestamp_scale"]) // 1000,
-                    "n_tracks": f["n_tracks"],
-                    "n_video": f["n_video"],
-                    "n_audio": f["n_audio"],
-                    "video_codec": f["video_codec"],
-                    "audio_codec": f["audio_codec"],
-                    "width": f["width"],
-                    "height": f["height"],
-                    "cluster_bytes": f["cluster_bytes"],
-                })
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "doc_type", "timestamp_scale", "duration_us",
-                    "n_tracks", "n_video", "n_audio", "video_codec",
-                    "audio_codec", "width", "height", "cluster_bytes",
-                ],
-            )
-            for c in (
-                "id", "timestamp_scale", "duration_us", "n_tracks",
-                "n_video", "n_audio", "width", "height", "cluster_bytes",
-            ):
-                out[c] = out[c].astype("int64")
-            yield out
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, doc_type string, timestamp_scale bigint, "
-        "duration_us bigint, n_tracks bigint, n_video bigint, "
-        "n_audio bigint, video_codec string, audio_codec string, "
-        "width bigint, height bigint, cluster_bytes bigint",
+    return _census(
+        df, id_col, payload_col, _MKV_FIELDS,
+        lambda b: _mkv_facts(_parse_matroska(b)),
     )
 
 
@@ -9115,21 +8857,16 @@ def synth_aiff_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     variants. Rate 8000/11025/22050/44100 by id%4 via the exact
     80-bit extended field."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            n = 64 + 4 * (i % 16)
-            base = (3 * i + 5 * np.arange(n, dtype=np.int64)) % 256 - 128
-            bits = (8, 16, 24, 32)[i % 4]
-            scale = {8: 1, 16: 1 << 8, 24: 1 << 16, 32: 1 << 24}[bits]
-            rate = (8000, 11025, 22050, 44100)[i % 4]
-            le = bits != 8 and i % 8 >= 4
-            return encode_aiff(base * scale, rate, bits, little_endian=le)
+    def one(i: int) -> bytes:
+        n = 64 + 4 * (i % 16)
+        base = (3 * i + 5 * np.arange(n, dtype=np.int64)) % 256 - 128
+        bits = (8, 16, 24, 32)[i % 4]
+        scale = {8: 1, 16: 1 << 8, 24: 1 << 16, 32: 1 << 24}[bits]
+        rate = (8000, 11025, 22050, 44100)[i % 4]
+        le = bits != 8 and i % 8 >= 4
+        return encode_aiff(base * scale, rate, bits, little_endian=le)
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 def aiff_census(
@@ -9143,40 +8880,25 @@ def aiff_census(
 
     _SCALE = {8: 1, 16: 1 << 8, 24: 1 << 16, 32: 1 << 24}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cols = [], [[] for _ in range(6)]
-            for i, raw in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(raw)
-                rate, s = _decode_aiff(raw)
-                # depth from the COMM chunk, not the data
-                comm_at = raw.index(b"COMM")
-                (bits,) = struct.unpack_from(">H", raw, comm_at + 8 + 6)
-                sc = _SCALE[bits]
-                q = s // sc
-                ids.append(int(i))
-                cols[0].append(int(s.size))
-                cols[1].append(int(s.size) * 1_000_000 // rate)
-                cols[2].append(int(q.sum()))
-                cols[3].append(int(q.min()))
-                cols[4].append(int(q.max()))
-                cols[5].append(int(q[0]))
-            yield pd.DataFrame(
-                {
-                    "id": pd.Series(ids, dtype="int64"),
-                    "n_samples": pd.Series(cols[0], dtype="int64"),
-                    "duration_us": pd.Series(cols[1], dtype="int64"),
-                    "sum_q": pd.Series(cols[2], dtype="int64"),
-                    "min_q": pd.Series(cols[3], dtype="int64"),
-                    "max_q": pd.Series(cols[4], dtype="int64"),
-                    "first_q": pd.Series(cols[5], dtype="int64"),
-                }
-            )
+    _SCALE = {8: 1, 16: 1 << 8, 24: 1 << 16, 32: 1 << 24}
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, n_samples bigint, duration_us bigint, sum_q bigint, "
-        "min_q bigint, max_q bigint, first_q bigint",
+    def facts(raw: bytes) -> tuple:
+        rate, s = _decode_aiff(raw)
+        # depth from the COMM chunk, not the data
+        comm_at = raw.index(b"COMM")
+        (bits,) = struct.unpack_from(">H", raw, comm_at + 8 + 6)
+        q = s // _SCALE[bits]
+        return (
+            int(s.size), int(s.size) * 1_000_000 // rate,
+            int(q.sum()), int(q.min()), int(q.max()), int(q[0]),
+        )
+
+    return _census(
+        df, id_col, payload_col,
+        [("n_samples", "bigint"), ("duration_us", "bigint"),
+         ("sum_q", "bigint"), ("min_q", "bigint"), ("max_q", "bigint"),
+         ("first_q", "bigint")],
+        facts,
     )
 
 
@@ -9306,30 +9028,25 @@ def synth_id3_mp3_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     version) followed by two real framing frames — tag size becomes
     exact LENGTH() arithmetic the oracle re-derives."""
 
-    @F.pandas_udf("binary")
-    def make(ids: pd.Series) -> pd.Series:
-        def one(i: int) -> bytes:
-            i = int(i)
-            version = 3 if i % 2 == 0 else 4
-            enc = (0, 1, 3)[i % 3]
-            year_fid = "TYER" if version == 3 else "TDRC"
-            tag = encode_id3v2(
-                [
-                    ("TIT2", f"Title {i}"),
-                    ("TPE1", f"Artist {i % 100}"),
-                    ("TALB", f"Album {i % 10}"),
-                    ("TRCK", str(1 + i % 20)),
-                    (year_fid, str(1990 + i % 35)),
-                ],
-                version=version,
-                encoding=enc,
-            )
-            audio = encode_mp3_stream([(9, 0), (9, 1)])
-            return tag + audio
+    def one(i: int) -> bytes:
+        version = 3 if i % 2 == 0 else 4
+        enc = (0, 1, 3)[i % 3]
+        year_fid = "TYER" if version == 3 else "TDRC"
+        tag = encode_id3v2(
+            [
+                ("TIT2", f"Title {i}"),
+                ("TPE1", f"Artist {i % 100}"),
+                ("TALB", f"Album {i % 10}"),
+                ("TRCK", str(1 + i % 20)),
+                (year_fid, str(1990 + i % 35)),
+            ],
+            version=version,
+            encoding=enc,
+        )
+        audio = encode_mp3_stream([(9, 0), (9, 1)])
+        return tag + audio
 
-        return ids.map(one)
-
-    return spread(df).withColumn("payload", make(F.col(id_col)))
+    return _synth_payload(df, id_col, one)
 
 
 def id3_tags_census(
@@ -9338,28 +9055,12 @@ def id3_tags_census(
     """mm42 census op: REAL ID3v2 parse per row (mapInPandas,
     map-side only) → version, declared tag bytes, frame count, and
     the five canonical text tags."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, raw in zip(pdf[id_col], pdf[payload_col]):
-                f = _parse_id3v2(bytes(raw))
-                f["id"] = int(i)
-                rows.append(f)
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "version", "tag_bytes", "n_frames",
-                    "title", "artist", "album", "track", "year",
-                ],
-            )
-            for c in ("id", "version", "tag_bytes", "n_frames"):
-                out[c] = out[c].astype("int64")
-            yield out
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches,
-        "id bigint, version bigint, tag_bytes bigint, n_frames bigint, "
-        "title string, artist string, album string, track string, "
-        "year string",
+    fields = [
+        ("version", "bigint"), ("tag_bytes", "bigint"),
+        ("n_frames", "bigint"), ("title", "string"), ("artist", "string"),
+        ("album", "string"), ("track", "string"), ("year", "string"),
+    ]
+    return _census(
+        df, id_col, payload_col, fields,
+        lambda b: _pick(_parse_id3v2(b), fields),
     )

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sparkswift.operators.groupby import keyed_frame
 from sparkswift.operators.rolling import _BUILTIN, _parse_duration_us
 
 
@@ -165,7 +166,9 @@ def resample_apply_udf(
     base: int = 0,
 ) -> DataFrame:
     """Arbitrary per-bucket pandas UDF: the bucket's rows arrive as a
-    pandas DataFrame; the UDF returns a DataFrame. Spark shuffles by
+    pandas DataFrame; the UDF returns a DataFrame, a Series (one row)
+    or a scalar (one ``result`` row), as in
+    :func:`~sparkswift.operators.groupby.groupby_apply`. Spark shuffles by
     (bucket, extra_keys) — each bucket fits one task at any total scale
     as long as rule × entity granularity keeps buckets bounded.
     Edge rules as in :func:`resample_agg`."""
@@ -180,13 +183,9 @@ def resample_apply_udf(
     )
 
     def _per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = func(pdf)
-        if not isinstance(out, pd.DataFrame):
-            out = pd.DataFrame({"result": [out]})
-        for k in reversed([bucket_col, *keys]):
-            if k not in out.columns:
-                out.insert(0, k, pdf[k].iloc[0])
-        return out
+        return keyed_frame(
+            func(pdf), {k: pdf[k].iloc[0] for k in (bucket_col, *keys)}
+        )
 
     return bucketed.groupBy(bucket_col, *keys).applyInPandas(_per_bucket, schema)
 

@@ -456,29 +456,32 @@ def rolling_apply_udf(
     out_name = output_col or f"{on}_roll_udf"
     ord_cols = [order_by] if isinstance(order_by, str) else list(order_by)
 
-    # swifter-style adaptive route (reference swifter.py:309-317): if
-    # the UDF gives identical results on a raw ndarray window, use
-    # raw=True inside pandas.rolling — C-loop dispatch instead of a
-    # Series construction per window. Validated on a driver-side
-    # sample, exactly like the reference's vectorize-try gate.
-    use_raw = False
-    if isinstance(window, int):
-        try:
-            import numpy as np
-
-            from sparkswift.plans.inference import suppress_sample_output
-
-            sample = (
-                df.select(on).limit(max(window * 5, 50)).toPandas()[on]
-            )
-            with suppress_sample_output():
-                a = sample.rolling(window, min_periods=1).apply(func, raw=False)
-                b = sample.rolling(window, min_periods=1).apply(func, raw=True)
-            use_raw = bool(np.allclose(a.to_numpy(), b.to_numpy(), equal_nan=True))
-        except Exception:
-            use_raw = False
-
     if partition_by:
+        # swifter-style adaptive route (reference swifter.py:309-317):
+        # if the UDF gives identical results on a raw ndarray window,
+        # use raw=True inside pandas.rolling — C-loop dispatch instead
+        # of a Series construction per window. Validated on a
+        # driver-side sample, exactly like the reference's
+        # vectorize-try gate; only integer windows take raw=.
+        use_raw = False
+        if isinstance(window, int):
+            try:
+                import numpy as np
+
+                from sparkswift.plans.inference import suppress_sample_output
+
+                sample = (
+                    df.select(on).limit(max(window * 5, 50)).toPandas()[on]
+                )
+                with suppress_sample_output():
+                    a = sample.rolling(window, min_periods=1).apply(func, raw=False)
+                    b = sample.rolling(window, min_periods=1).apply(func, raw=True)
+                use_raw = bool(
+                    np.allclose(a.to_numpy(), b.to_numpy(), equal_nan=True)
+                )
+            except Exception:
+                use_raw = False
+
         schema = T.StructType(
             list(df.schema.fields) + [T.StructField(out_name, T.DoubleType(), True)]
         )

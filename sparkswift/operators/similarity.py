@@ -1155,14 +1155,6 @@ def _semdedup_store(spark, store: str, num_buckets: int = 16):
     )
 
 
-def _semdedup_store_pair_check(spark, store: str) -> bool:
-    """Both store tables or neither — a half-written pair fails LOUDLY
-    (the d14 lesson: silently re-bootstrapping orphans every earlier
-    survivor from the probe). Delegates to the shared all-or-nothing
-    existence contract."""
-    return _semdedup_store(spark, store).exists()
-
-
 def semdedup_store_build(
     df: DataFrame,
     store: str,

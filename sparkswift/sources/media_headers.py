@@ -22,7 +22,11 @@ size/seek arithmetic — the small header structures it fetches are fed
 verbatim to the SAME certified in-memory parsers
 (operators/multimodal.py: _parse_mp4_container, _parse_avi_container,
 _decode_mp3_frame_header), so the two ingest paths cannot drift on
-field semantics. A pytest equality law additionally pins ranged ==
+field semantics. The AVI, MP4 and Matroska loaders also take their
+field lists and derived values (exact µs durations, frame counts)
+from the in-memory ops' facts functions (_avi_facts, _mp4_facts,
+_mkv_facts), and every loader runs through the same ``_map_rows``
+shell. A pytest equality law additionally pins ranged ==
 in-memory census rows across every synth-fixture branch.
 
 Scale notes: one listing row per file → one task per file batch;
@@ -42,14 +46,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkswift.operators.multimodal import (
+    _AVI_FIELDS,
+    _MKV_FIELDS,
+    _MP3_FIELDS,
+    _MP4_FIELDS,
+    Fields,
+    _avi_facts,
     _decode_f80,
     _decode_mp3_frame_header,
     _ebml_el,
+    _map_rows,
+    _mkv_facts,
+    _mp4_facts,
     _parse_avi_container,
     _parse_matroska,
     _parse_mp4_container,
     _parse_ogg_vorbis,
     _parse_webp_header,
+    _pick,
     _read_ebml_id,
     _read_ebml_size,
 )
@@ -495,38 +509,28 @@ def list_files(
 
 def _header_loader(
     listing: DataFrame,
-    census: Callable[[RangedReader], dict],
-    fields: list[tuple[str, str]],
+    census: Callable[[RangedReader], tuple],
+    fields: Fields,
     block_bytes: int,
 ) -> DataFrame:
-    """Shared mapInPandas shell: per listing row, open ranged, run
-    the census, emit census fields + header_bytes_read. binaryFile
-    packs even a few hundred tiny files into dozens of splits, each
-    paying the per-task floor for a header read, so the listing is
-    coalesced to the spread "listing" width — a narrow merge of the
-    scan's splits, no shuffle."""
-    listing = listing.coalesce(width(listing, "listing"))
-    schema = "path string, file_bytes bigint, " + ", ".join(
-        f"{n} {t}" for n, t in fields
-    ) + ", header_bytes_read bigint"
+    """Per listing row, open ranged, run the census (its values in
+    ``fields`` order), emit path, file_bytes, the census fields and
+    header_bytes_read. binaryFile packs even a few hundred tiny files
+    into dozens of splits, each paying the per-task floor for a
+    header read, so the listing is coalesced to the spread "listing"
+    width — a narrow merge of the scan's splits, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "path": [], "file_bytes": [],
-                **{n: [] for n, _ in fields}, "header_bytes_read": [],
-            }
-            for p, fb in zip(pdf["path"], pdf["file_bytes"]):
-                r = open_ranged(str(p), block_bytes)
-                c = census(r)
-                out["path"].append(str(p))
-                out["file_bytes"].append(int(fb))
-                for nm, _ in fields:
-                    out[nm].append(c[nm])
-                out["header_bytes_read"].append(r.bytes_fetched)
-            yield pd.DataFrame(out)
+    def row(p, fb) -> tuple:
+        r = open_ranged(str(p), block_bytes)
+        return (str(p), int(fb), *census(r), r.bytes_fetched)
 
-    return listing.mapInPandas(batches, schema)
+    return _map_rows(
+        listing.coalesce(width(listing, "listing")),
+        ["path", "file_bytes"],
+        [("path", "string"), ("file_bytes", "bigint"), *fields,
+         ("header_bytes_read", "bigint")],
+        row,
+    )
 
 
 def load_mp4_headers(
@@ -539,22 +543,10 @@ def load_mp4_headers(
     media bytes — mm29's facts (brand, timescale/duration, exact µs,
     track count, codec fourccs, mdat byte total) at listing+headers
     cost."""
-
-    def census(r: RangedReader) -> dict:
-        c = census_mp4_ranged(r)
-        c["duration_ticks"] = c.pop("duration")
-        c["duration_us"] = c["duration_ticks"] * 1_000_000 // c["timescale"]
-        return c
-
     return _header_loader(
         list_files(spark, path, glob),
-        census,
-        [
-            ("brand", "string"), ("timescale", "bigint"),
-            ("duration_ticks", "bigint"), ("duration_us", "bigint"),
-            ("n_tracks", "bigint"), ("video_codec", "string"),
-            ("audio_codec", "string"), ("mdat_bytes", "bigint"),
-        ],
+        lambda r: _mp4_facts(census_mp4_ranged(r)),
+        _MP4_FIELDS,
         block_bytes,
     )
 
@@ -568,24 +560,10 @@ def load_avi_headers(
     """RIFF/AVI container census over a directory at headers-only
     cost — mm28's facts (codec fourcc, geometry, frame count, exact
     µs duration, video byte total, index presence)."""
-
-    def census(r: RangedReader) -> dict:
-        c = census_avi_ranged(r)
-        return {
-            "codec": c["codec"] or "", "width": c["width"],
-            "height": c["height"], "n_frames": c["n_chunks"],
-            "duration_us": c["n_chunks"] * c["us_per_frame"],
-            "video_bytes": c["video_bytes"], "has_index": c["has_index"],
-        }
-
     return _header_loader(
         list_files(spark, path, glob),
-        census,
-        [
-            ("codec", "string"), ("width", "bigint"), ("height", "bigint"),
-            ("n_frames", "bigint"), ("duration_us", "bigint"),
-            ("video_bytes", "bigint"), ("has_index", "bigint"),
-        ],
+        lambda r: _avi_facts(census_avi_ranged(r)),
+        _AVI_FIELDS,
         block_bytes,
     )
 
@@ -599,33 +577,10 @@ def load_mkv_headers(
     """Matroska/WebM container census over a directory at
     headers-only cost — mm40's facts with Cluster payloads accounted
     from size vints, never fetched."""
-
-    def census(r: RangedReader) -> dict:
-        c = census_mkv_ranged(r)
-        dur = c.pop("duration_ticks")
-        if dur != int(dur):
-            raise ValueError(f"non-integral Matroska Duration {dur}")
-        return {
-            "doc_type": c["doc_type"],
-            "timestamp_scale": c["timestamp_scale"],
-            "duration_us": int(dur) * c["timestamp_scale"] // 1000,
-            "n_tracks": c["n_tracks"], "n_video": c["n_video"],
-            "n_audio": c["n_audio"], "video_codec": c["video_codec"],
-            "audio_codec": c["audio_codec"], "width": c["width"],
-            "height": c["height"], "cluster_bytes": c["cluster_bytes"],
-        }
-
     return _header_loader(
         list_files(spark, path, glob),
-        census,
-        [
-            ("doc_type", "string"), ("timestamp_scale", "bigint"),
-            ("duration_us", "bigint"), ("n_tracks", "bigint"),
-            ("n_video", "bigint"), ("n_audio", "bigint"),
-            ("video_codec", "string"), ("audio_codec", "string"),
-            ("width", "bigint"), ("height", "bigint"),
-            ("cluster_bytes", "bigint"),
-        ],
+        lambda r: _mkv_facts(census_mkv_ranged(r)),
+        _MKV_FIELDS,
         block_bytes,
     )
 
@@ -640,15 +595,11 @@ def load_mp3_headers(
     """MP3 framing census over a directory at 4-bytes-per-frame cost
     — mm26's facts; ``max_frames`` switches to first-N-frames triage
     with ``truncated`` = 1 flagging the inexact rows."""
+    fields = [*_MP3_FIELDS, ("truncated", "bigint")]
     return _header_loader(
         list_files(spark, path, glob),
-        lambda r: census_mp3_ranged(r, max_frames),
-        [
-            ("n_frames", "bigint"), ("total_samples", "bigint"),
-            ("duration_us", "bigint"), ("stream_bytes", "bigint"),
-            ("min_kbps", "bigint"), ("max_kbps", "bigint"),
-            ("is_vbr", "bigint"), ("truncated", "bigint"),
-        ],
+        lambda r: _pick(census_mp3_ranged(r, max_frames), fields),
+        fields,
         block_bytes,
     )
 
@@ -738,71 +689,52 @@ def load_media_triage(
     columns. Unrecognized files raise (triage must be loud, not
     lossy); pre-filter with ``glob`` to quarantine junk."""
 
-    def census(r: RangedReader) -> dict:
+    def named(fields: Fields, facts: tuple) -> dict:
+        return {n: v for (n, _), v in zip(fields, facts)}
+
+    def census(r: RangedReader) -> tuple:
         fmt = sniff_media_format(r)
         if fmt == "mp3":
             c = census_mp3_ranged(r, mp3_max_frames)
-            return {
-                "media_format": "mp3", "detail": "",
-                "n_units": c["n_frames"], "duration_us": c["duration_us"],
-                "media_bytes": c["stream_bytes"],
-            }
+            return "mp3", "", c["n_frames"], c["duration_us"], c["stream_bytes"]
         if fmt == "avi":
-            c = census_avi_ranged(r)
-            return {
-                "media_format": "avi", "detail": c["codec"] or "",
-                "n_units": c["n_chunks"],
-                "duration_us": c["n_chunks"] * c["us_per_frame"],
-                "media_bytes": c["video_bytes"],
-            }
+            c = named(_AVI_FIELDS, _avi_facts(census_avi_ranged(r)))
+            return (
+                "avi", c["codec"], c["n_frames"], c["duration_us"],
+                c["video_bytes"],
+            )
         if fmt == "webp":
             c = census_webp_ranged(r)
-            return {
-                "media_format": "webp", "detail": c["variant"],
-                "n_units": 1 + c["has_anim"],  # still=1; animated >=2
-                "duration_us": 0,  # stills carry no timeline
-                "media_bytes": c["image_bytes"],
-            }
+            # n_units: still=1, animated >=2; stills carry no timeline
+            return "webp", c["variant"], 1 + c["has_anim"], 0, c["image_bytes"]
         if fmt == "aiff":
             c = census_aiff_ranged(r)
-            return {
-                "media_format": "aiff",
-                "detail": f"pcm{c['bits']}"
-                if c["compression"] in ("NONE", "sowt")
-                else c["compression"],
-                "n_units": c["n_frames"],
-                "duration_us": c["duration_us"],
-                "media_bytes": c["audio_bytes"],
-            }
+            detail = (
+                f"pcm{c['bits']}" if c["compression"] in ("NONE", "sowt")
+                else c["compression"]
+            )
+            return (
+                "aiff", detail, c["n_frames"], c["duration_us"],
+                c["audio_bytes"],
+            )
         if fmt == "mkv":
-            c = census_mkv_ranged(r)
-            if c["duration_ticks"] != int(c["duration_ticks"]):
-                raise ValueError(
-                    f"non-integral Matroska Duration {c['duration_ticks']}"
-                )
-            return {
-                "media_format": "mkv", "detail": c["video_codec"],
-                "n_units": c["n_tracks"],
-                "duration_us": int(c["duration_ticks"])
-                * c["timestamp_scale"] // 1000,
-                "media_bytes": c["cluster_bytes"],
-            }
+            c = named(_MKV_FIELDS, _mkv_facts(census_mkv_ranged(r)))
+            return (
+                "mkv", c["video_codec"], c["n_tracks"], c["duration_us"],
+                c["cluster_bytes"],
+            )
         if fmt == "ogg":
             c = census_ogg_ranged(r)
-            return {
-                "media_format": "ogg", "detail": "vorbis",
-                "n_units": c["n_pages"],
-                "duration_us": c["last_granule"] * 1_000_000
-                // c["sample_rate"],
-                "media_bytes": c["audio_bytes"],
-            }
-        c = census_mp4_ranged(r)
-        return {
-            "media_format": "mp4", "detail": c["video_codec"],
-            "n_units": c["n_tracks"],
-            "duration_us": c["duration"] * 1_000_000 // c["timescale"],
-            "media_bytes": c["mdat_bytes"],
-        }
+            return (
+                "ogg", "vorbis", c["n_pages"],
+                c["last_granule"] * 1_000_000 // c["sample_rate"],
+                c["audio_bytes"],
+            )
+        c = named(_MP4_FIELDS, _mp4_facts(census_mp4_ranged(r)))
+        return (
+            "mp4", c["video_codec"], c["n_tracks"], c["duration_us"],
+            c["mdat_bytes"],
+        )
 
     return _header_loader(
         list_files(spark, path, glob),

@@ -517,8 +517,8 @@ def test_apply_rows_vectorize_gate_rejects_row_scalar(spark, sf_dir):
 
 def test_validate_gate_catches_python_sql_divergence(spark):
     """Python % follows the divisor's sign, SQL % the dividend's:
-    -7 % 3 is 2 in Python but -1 in SQL. With the default
-    validate=True the sample gate must detect the divergence and route
+    -7 % 3 is 2 in Python but -1 in SQL. The always-on sample gate
+    must detect the divergence and route
     to the Arrow path, where pandas semantics hold (ADVICE item;
     reference always gates its fast path, swifter.py:313-316)."""
     import pandas as pd

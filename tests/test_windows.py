@@ -369,6 +369,62 @@ def test_rolling_udf_unkeyed_preserves_nulls(spark):
     )
 
 
+def test_global_rolling_udf_build_runs_no_job(spark):
+    """The raw-window check samples the frame only for the
+    partition_by route, the one route that reads its answer, so
+    building a global rolling UDF launches no job."""
+    df = spark.range(0, 200).select(
+        F.col("id").alias("i"), (F.col("id") % 13).cast("double").alias("v")
+    )
+    sc = spark.sparkContext
+    group = "global-rolling-udf-build"
+    sc.setJobGroup(group, group)
+    try:
+        out = rolling_apply_udf(
+            df, order_by="i", window=5, func=lambda s: s.max() - s.min(),
+            on="v", output_col="rr",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    got = out.toPandas().sort_values("i")["rr"].reset_index(drop=True)
+    pdf = df.toPandas().sort_values("i")
+    want = pdf["v"].rolling(5).apply(lambda s: s.max() - s.min(), raw=False)
+    pd.testing.assert_series_equal(
+        got.astype(float), want.reset_index(drop=True), check_names=False
+    )
+
+
+def test_resample_apply_udf_series_result_is_one_row_per_bucket(ev):
+    """A func returning a Series gives one row per bucket, as
+    groupby_apply gives one row per group for the same func."""
+    from sparkswift.operators.resample import resample_apply_udf
+
+    def stats(g):
+        return pd.Series({"s": float(g["value"].sum()), "n": len(g)})
+
+    out = (
+        resample_apply_udf(
+            ev.select("ts", "value"), ts_col="ts", rule="1 hour", func=stats,
+            schema="bucket_ts timestamp, s double, n bigint",
+        )
+        .toPandas().sort_values("bucket_ts").reset_index(drop=True)
+    )
+    pdf = ev.select("ts", "value").toPandas()
+    r = pdf.set_index("ts")["value"].resample("1h")
+    exp = pd.DataFrame({"s": r.sum(), "n": r.count()})
+    exp = exp[exp["n"] > 0].rename_axis("bucket_ts").reset_index()
+    pd.testing.assert_frame_equal(
+        out, exp.astype({"n": "int64"}), check_dtype=False, rtol=1e-9
+    )
+    per_group = groupby_apply(
+        ev.select(F.date_trunc("hour", "ts").alias("bucket_ts"), "value"),
+        "bucket_ts", lambda g: stats(g),
+        schema="bucket_ts timestamp, s double, n bigint",
+    )
+    assert per_group.count() == len(out)
+
+
 def test_resample_closed_right_offset_matches_pandas(ev):
     """closed='right' + offset + label='right' (reference resample
     kwargs swifter.py:174-220) against pandas.resample itself."""

@@ -7,10 +7,16 @@ columns; floats compared with np.isclose AND exact-equality reported
 separately so hash-sensitivity is visible).
 
 Usage: python tools/check.py [sf_dir] [query ...]
+
+Each query argument is an ``fnmatch`` pattern (``'mm*' 'st3*'``); a
+plain name matches only itself. Runs from any directory: the repo is
+found from this file and handed to the Python workers on PYTHONPATH.
 """
 
 from __future__ import annotations
 
+import fnmatch
+import os
 import sys
 import time
 
@@ -18,10 +24,14 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
+ONLY = sys.argv[2:]
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -57,7 +67,7 @@ def main() -> int:
     failures = []
     ran = 0
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if ONLY and not any(fnmatch.fnmatchcase(name, p) for p in ONLY):
             continue
         ran += 1
         t0 = time.time()
